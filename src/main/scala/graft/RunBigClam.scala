@@ -9,25 +9,26 @@ import graft.bigclam.BigClam
   * gradient ascent with Armijo line search → threshold/argmax communities)
   * as one command:
   *
-  *   runMain graft.RunBigClam <edgeListPath> <K> <iterations> <outDir> [dense|sparse|sparse:<m>] [stableTol] [llhTol] [ego|egosplit|auto]
+  *   runMain graft.RunBigClam <edgeListPath> <K> <iterations> <outDir> [sparse|sparse:<m>] [stableTol] [llhTol] [ego|egosplit|auto]
   *
   * e.g. the graph bundled with the reference:
   *   runMain graft.RunBigClam /root/reference/data/facebook_combined.txt 8 3 /tmp/fb_out
-  * `sparse` runs the v3 large-K path (fitSparse) — same math, sparse rows.
-  * `sparse:<m>` adds the per-row support cap (keep the m largest entries) —
-  * the bounded-cost configuration for K in the thousands.
-  * `stableTol` (sparse modes only) stops early once the per-iteration argmax
-  * membership churn drops below the tolerance, making `iterations` a cap.
-  * `llhTol` (sparse modes only; 0 disables) stops at the reference's relative
-  * LLH rule. `initMode` (sparse modes only) picks the cold-start init:
-  * `ego` (default, conductance whole-ego + padding) or `egosplit` (spread
-  * seeds + LPA personas + no padding — the dense-cover fix).
+  * The fit is always [[BigClam.fitSparse]]; no mode (or `sparse`) runs it
+  * uncapped. `sparse:<m>` adds the per-row support cap (keep the m largest
+  * entries) — the bounded-cost configuration for K in the thousands.
+  * `stableTol` stops early once the per-iteration argmax membership churn
+  * drops below the tolerance, making `iterations` a cap. `llhTol` (0
+  * disables) stops at the reference's relative LLH rule. `initMode` picks
+  * the cold-start init: `ego` (default, conductance whole-ego + padding) or
+  * `egosplit` (spread seeds + LPA personas + no padding — the dense-cover
+  * fix).
   */
 object RunBigClam {
   def main(args: Array[String]): Unit = {
     val Array(path, kStr, itStr, outDir) = args.take(4)
-    val mode = args.lift(4).getOrElse("dense")
-    val sparse = mode.startsWith("sparse")
+    val mode = args.lift(4).getOrElse("sparse")
+    require(mode == "sparse" || mode.startsWith("sparse:"),
+      s"mode must be sparse or sparse:<m>, got $mode")
     val supportCap = if (mode.startsWith("sparse:")) Some(mode.drop(7).toInt) else None
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
@@ -40,22 +41,16 @@ object RunBigClam {
     val edges = GraphOps.symEdges(GraphOps.loadEdgeList(spark, path)).cache()
     val nEdges = edges.count()
     val p = BigClam.Params(k = kStr.toInt)
-    // sparse mode scores through communitiesSparse (pair-identical to the
-    // dense rule on fitted models, BigClamSpec) — at the v3 magnitude
-    // (K=8000 × 1M nodes) the old toDenseF here materialized 64 GB of
-    // factor rows just to threshold them
-    val (com, history) =
-      if (sparse) {
-        val (fs, h) = BigClam.fitSparse(edges, p, iterations = itStr.toInt,
-          supportCap = supportCap,
-          stableTol = args.lift(5).map(_.toDouble).filter(_ > 0),
-          llhTol = args.lift(6).map(_.toDouble).filter(_ > 0),
-          initMode = args.lift(7).getOrElse("ego"))
-        (BigClam.communitiesSparse(fs, edges, p), h)
-      } else {
-        val (f, h) = BigClam.fit(edges, p, iterations = itStr.toInt)
-        (BigClam.communities(f, edges, p), h)
-      }
+    // scored through communitiesSparse (pair-identical to the dense rule
+    // on fitted models, BigClamSpec) — at the v3 magnitude (K=8000 × 1M
+    // nodes) a toDenseF here would materialize 64 GB of factor rows just
+    // to threshold them
+    val (fs, history) = BigClam.fitSparse(edges, p, iterations = itStr.toInt,
+      supportCap = supportCap,
+      stableTol = args.lift(5).map(_.toDouble).filter(_ > 0),
+      llhTol = args.lift(6).map(_.toDouble).filter(_ > 0),
+      initMode = args.lift(7).getOrElse("ego"))
+    val com = BigClam.communitiesSparse(fs, edges, p)
     com.write.mode("overwrite").parquet(outDir)
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"[bigclam] $path: ${nEdges} directed edges, K=${p.k} " +

@@ -11,10 +11,12 @@ import graft.bigclam.BigClam
   * early-stop when the relative LLH gain drops below 1e-3, report the
   * chosen K and the full evaluated grid.
   *
-  *   runMain graft.RunSelectK <edgeListPath> <minK> <maxK> <steps> <fitIters> [dense|sparse:<m>] [stableTol] [hotDegCap=200]
+  *   runMain graft.RunSelectK <edgeListPath> <minK> <maxK> <steps> <fitIters> [sparse|sparse:<m>] [stableTol] [hotDegCap=200]
   *
-  * `sparse:<m>` walks the grid over the capped sparse fit — the reference's
-  * own published grid (K=1000→9000) is only reachable that way; `stableTol`
+  * Every walk runs over [[BigClam.fitSparse]]; no mode (or `sparse`) fits
+  * each grid point uncapped. `sparse:<m>` walks the grid over the capped
+  * fit — the reference's own published grid (K=1000→9000) is only
+  * reachable that way; `stableTol`
   * further lets each grid point stop on membership stability. `hotDegCap`
   * truncates hub egos inside the shared conductance seeding (default 200,
   * like every other scale main — uncapped, a power-law hub expands deg²
@@ -23,12 +25,12 @@ object RunSelectK {
   def main(args: Array[String]): Unit = {
     if (args.length < 5) {
       System.err.println("usage: runMain graft.RunSelectK <edgeListPath> " +
-        "<minK> <maxK> <steps> <fitIters> [dense|sparse:<m>] [stableTol] " +
+        "<minK> <maxK> <steps> <fitIters> [sparse|sparse:<m>] [stableTol] " +
         "[hotDegCap=200] [llhTol=0 — 0 disables] " +
         "[heldFrac=0 — >0 runs the HELD-OUT sparse walk instead] " +
         "[modwalk=0 — 1 walks the grid printing fitted-argmax MODULARITY " +
         "per K instead of selecting] [initMode=ego|egosplit|auto] " +
-        "[criterion=llh|modularity|auto — sparse selection walk only] " +
+        "[criterion=llh|modularity|auto — selection walk only] " +
         "[raceMemory=0|1 — initMode=auto selection walk only] " +
         "[escalateCap=0 — extra log steps past maxK while the deciding " +
         "argmax rides the grid boundary] " +
@@ -37,7 +39,9 @@ object RunSelectK {
       sys.exit(2)
     }
     val Array(path, minK, maxK, steps, iters) = args.take(5)
-    val mode = args.lift(5).getOrElse("dense")
+    val mode = args.lift(5).getOrElse("sparse")
+    require(mode == "sparse" || mode.startsWith("sparse:"),
+      s"mode must be sparse or sparse:<m>, got $mode")
     val supportCap = if (mode.startsWith("sparse:")) Some(mode.drop(7).toInt) else None
     val stableTol = args.lift(6).map(_.toDouble)
     val hotDegCap = Some(args.lift(7).map(_.toLong).getOrElse(200L)).filter(_ > 0)
@@ -124,38 +128,29 @@ object RunSelectK {
         println(f"[selectk]   K=$k%-6d train_llh=$tr%.4e held_llh=$ho%.4e") }
       println(s"[selectk] held-out choice K=$hk")
     } else {
-      require(criterion == "llh" || mode.startsWith("sparse"),
-        "criterion=modularity|auto needs the sparse walk")
-      require((escalateCap == 0 && stateDir.isEmpty) || mode.startsWith("sparse"),
-        "escalateCap/stateDir need the sparse walk")
       var decidedBy = criterion
       var diag = Option.empty[BigClam.SelectKDiag]
       val (bestK, _, grid) =
-        if (mode.startsWith("sparse"))
-          BigClam.selectKSparse(edges, BigClam.Params(k = minK.toInt),
-            minK = minK.toInt, maxK = maxK.toInt, steps = steps.toInt,
-            fitIterations = iters.toInt, supportCap = supportCap,
-            stableTol = stableTol, hotDegCap = hotDegCap, llhTol = llhTol,
-            initMode = initMode, criterion = criterion,
-            // per-grid-point init provenance: which init was requested vs
-            // chosen (race or memory), both race LLHs, where the loser was
-            // abandoned — the capstone walk's audit trail
-            initProbe = d => println(s"[selectk]   init: " +
-              s"requested=${d.requested} chosen=${d.chosen} " +
-              s"egoLlh=${d.egoLlh.getOrElse(Double.NaN)} " +
-              s"splitLlh=${d.splitLlh.getOrElse(Double.NaN)} " +
-              s"abandonedAt=${d.abandonedAtIter.getOrElse(-1)}"),
-            criterionProbe = (k, llh, q) => println(
-              f"[selectk]   K=$k%-6d llh=$llh%.4e" +
-                (if (q.isNaN) "" else f" q=$q%.4f")),
-            decisionProbe = d => decidedBy = d,
-            raceMemory = raceMemory,
-            escalateCap = escalateCap, stateDir = stateDir,
-            diagProbe = d => diag = Some(d))
-        else
-          BigClam.selectK(edges, BigClam.Params(k = minK.toInt),
-            minK = minK.toInt, maxK = maxK.toInt, steps = steps.toInt,
-            fitIterations = iters.toInt, hotDegCap = hotDegCap)
+        BigClam.selectKSparse(edges, BigClam.Params(k = minK.toInt),
+          minK = minK.toInt, maxK = maxK.toInt, steps = steps.toInt,
+          fitIterations = iters.toInt, supportCap = supportCap,
+          stableTol = stableTol, hotDegCap = hotDegCap, llhTol = llhTol,
+          initMode = initMode, criterion = criterion,
+          // per-grid-point init provenance: which init was requested vs
+          // chosen (race or memory), both race LLHs, where the loser was
+          // abandoned — the capstone walk's audit trail
+          initProbe = d => println(s"[selectk]   init: " +
+            s"requested=${d.requested} chosen=${d.chosen} " +
+            s"egoLlh=${d.egoLlh.getOrElse(Double.NaN)} " +
+            s"splitLlh=${d.splitLlh.getOrElse(Double.NaN)} " +
+            s"abandonedAt=${d.abandonedAtIter.getOrElse(-1)}"),
+          criterionProbe = (k, llh, q) => println(
+            f"[selectk]   K=$k%-6d llh=$llh%.4e" +
+              (if (q.isNaN) "" else f" q=$q%.4f")),
+          decisionProbe = d => decidedBy = d,
+          raceMemory = raceMemory,
+          escalateCap = escalateCap, stateDir = stateDir,
+          diagProbe = d => diag = Some(d))
       val secs = (System.nanoTime() - t0) / 1e9
       println(f"[selectk] $path: $nEdges directed edges, grid " +
         s"${grid.map(_._1).mkString("{", ",", "}")} ($iters iters each) " +

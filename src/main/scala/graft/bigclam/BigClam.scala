@@ -21,8 +21,8 @@ import graft.ops.VectorOps
   *    l(clip(Fu+t∇)) ≥ l(Fu) + α·t·‖P(∇)‖², α=0.05, take the largest
   *    accepted t (Bigclamv2.scala:104-113,144-145). Deliberate divergence:
   *    the bound uses the PROJECTED gradient norm, not the reference's
-  *    literal ∇ᵀ∇ — see projGrad for why the literal form deadlocks a
-  *    box-clipped ascent from a near-zero deterministic init.
+  *    literal ∇ᵀ∇ — see nodeStateSparse for why the literal form deadlocks
+  *    a box-clipped ascent from a near-zero deterministic init.
   *  - community threshold δ = sqrt(−log(1−ε)), ε = 2|E|/(|V|(|V|−1)), argmax
   *    fallback (Bigclamv2.scala:223-229)
   *
@@ -44,10 +44,7 @@ object BigClam {
       minP: Double = 1e-4,
       maxP: Double = 0.9999,
       minF: Double = 0.0,
-      maxF: Double = 1000.0,
-      tol: Double = 1e-4)
-
-  private val dot = VectorOps.dot _
+      maxF: Double = 1000.0)
 
   private def clipP(c: Column, p: Params): Column =
     least(greatest(c, lit(p.minP)), lit(p.maxP))
@@ -72,7 +69,9 @@ object BigClam {
   private def checkpointF(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.flatCheckpoint(df)
 
-  /** Deterministic conductance init with hash padding (no JVM Random —
+  /** DENSE conductance init, kept only as the reference that PropertySpec
+    * checks [[initSparse]] against bit-for-bit (every fit starts from
+    * `initSparse`). Deterministic conductance init with hash padding (no JVM Random —
     * SURVEY.md §7): community c = closed neighborhood of the c-th
     * locally-minimal-conductance seed; F(u)[c] = 1 iff u ∈ ego(seed_c).
     *
@@ -88,7 +87,7 @@ object BigClam {
     * (nnz ≈ K/16 per uncovered row, not the reference's dense K/2).
     *
     * `ranked` lets callers share one (persisted) seedRank across several
-    * inits — the ranking is K-independent, so a K-grid sweep (selectK)
+    * inits — the ranking is K-independent, so a K-grid sweep (selectKSparse)
     * computes conductance once per graph instead of once per K. */
   def init(edges: DataFrame, p: Params, ranked: Option[DataFrame] = None): DataFrame = {
     // top-K seeds by (phi, seed) via distributed TakeOrdered + broadcast
@@ -113,7 +112,7 @@ object BigClam {
   }
 
   /** Sparse-native init: exactly the rows of `toSparse(init(...))` —
-    * property-tested bit-for-bit in SparseParitySpec — without ever
+    * property-tested bit-for-bit in PropertySpec — without ever
     * materializing the dense length-K array per node. `init` builds a
     * K-double array for every node and `toSparse` immediately filters it
     * back down; at v3 scale (|V|=1M, K=1000) that is 8 GB of transient
@@ -471,158 +470,12 @@ object BigClam {
     out
   }
 
-  /** One gradient+LLH pass: per node (llh at F, gradient array, ‖∇‖²).
-    * sumF is the K-vector of column sums, passed as a literal (K doubles of
-    * driver state — the only non-distributed object in the loop). */
-  private[bigclam] def nodeState(edges: DataFrame, f: DataFrame, sumF: Array[Double], p: Params): DataFrame = {
-    val vsum = udaf(VectorOps.ArraySumAgg)
-    val fu = f.select(col("id").as("src"), col("f").as("fu"))
-    val fv = f.select(col("id").as("dst"), col("f").as("fv"))
-    val pairs = edges.join(fu, "src").join(fv, "dst")
-      .withColumn("dotv", dot(col("fu"), col("fv")))
-      .withColumn("pc", clipP(exp(-col("dotv")), p))
-    val sumFc = litArr(sumF)
-    pairs
-      .select(col("src").as("id"), col("fu"),
-        (log(lit(1.0) - col("pc")) + col("dotv")).as("llh_term"),
-        transform(col("fv"), x => x / (lit(1.0) - col("pc"))).as("grad_term"))
-      .groupBy("id")
-      .agg(first(col("fu")).as("fu"),
-        sum(col("llh_term")).as("llh_neigh"),
-        vsum(col("grad_term")).as("grad_neigh"))
-      .select(col("id"), col("fu"),
-        (col("llh_neigh") - dot(col("fu"), sumFc) + dot(col("fu"), col("fu"))).as("llh"),
-        zip_with(zip_with(col("grad_neigh"), sumFc, (g, sf) => g - sf), col("fu"),
-          (g, x) => g + x).as("grad"))
-      .withColumn("gnorm2", dot(projGrad(p), projGrad(p)))
-  }
-
-  /** Gradient projected onto the feasible directions: dims pinned at a bound
-    * with the gradient pointing OUT of the box contribute nothing — the
-    * projected step cannot move them. The Armijo sufficient-ascent bound
-    * must use THIS norm, not ∇ᵀ∇: the candidate moves along the projected
-    * direction, so demanding ascent proportional to the full norm (the
-    * reference's literal test, Bigclamv2.scala:144) makes acceptance
-    * structurally impossible whenever clipped dims dominate — with a
-    * deterministic conductance init on Email-Enron (tiny top-K egos, F≈0,
-    * every background dim clipped at 0 with grad −sumF[c]<0) the fit
-    * rejected every step for every node and the LLH stayed exactly flat.
-    * The reference never trips this only because it pads init with dense
-    * RANDOM rows (Bigclamv2.scala:62-63,77-89). On interior points the
-    * projection is the identity, so the two tests agree exactly. */
-  private def projGrad(p: Params): Column =
-    zip_with(col("grad"), col("fu"), (g, x) =>
-      when((x <= lit(p.minF) && g < lit(0.0)) || (x >= lit(p.maxF) && g > lit(0.0)), lit(0.0))
-        .otherwise(g))
-
-  /** Armijo backtracking for every node at once; candidate LLH is evaluated
-    * against the OLD F of the neighbors, as the reference does.
-    *
-    * Shuffle shape (round-2 verdict stretch): the 16 candidate neighbor-LLH
-    * terms ride as ONE 16-long array column per edge, aggregated with the
-    * element-wise vector sum — so the groupBy shuffles |E| rows of 16
-    * doubles, not 16·|E| rows each dragging a K-vector fnew (the explode
-    * form's payload). fnew never travels with the edges at all: it is
-    * recomputed per NODE from (fu, grad, t) after the aggregate, where the
-    * Armijo filter picks the largest accepted step (= smallest accepted
-    * index, β < 1). */
-  private[bigclam] def lineSearch(edges: DataFrame, f: DataFrame, state: DataFrame,
-      sumF: Array[Double], p: Params): DataFrame = {
-    val steps = (0 to p.maxBacktracks).map(i => math.pow(p.beta, i))
-    val stepsLit = litArr(steps.toArray)
-    val sumFc = litArr(sumF)
-    val vsum = udaf(VectorOps.ArraySumAgg)
-    val fv = f.select(col("id").as("dst"), col("f").as("fv"))
-    // gnorm2 = ‖P(∇)‖² = 0 ⟺ every dim is pinned or flat ⟺ fnew ≡ fu at any
-    // step: those nodes cannot move, so skip their whole line search (on a
-    // near-zero init that prunes almost every node from the |E|-row join)
-    val live = state.filter(col("gnorm2") > lit(0.0))
-    // per edge: neighbor LLH term of every candidate step, one array — a
-    // native kernel, like the sparse path: the HOF form rebuilt a K-wide
-    // interpreted zip_with per step per EDGE (16·K boxed evals/edge)
-    val termArrays = edges
-      .join(live.select(col("id").as("src"), col("fu"), col("grad")), "src")
-      .join(fv, "dst")
-      .select(col("src"),
-        graft.functions.DenseStepTermsExpr.terms(
-          col("fu"), col("grad"), col("fv"), stepsLit,
-          p.minF, p.maxF, p.minP, p.maxP).as("terms"))
-    val neighLlh = termArrays.groupBy(col("src").as("id"))
-      .agg(vsum(col("terms")).as("llh_neigh_new"))
-    // per node: candidate background term uses sumF adjusted for this
-    // node's own move: −fnew·(sumF − fu + fnew) + fnew·fnew =
-    // −fnew·sumF + fnew·fu (reference: sfT = sumF − fu + newfu,
-    // Bigclamv2.scala:141). Accept iff the Armijo bound holds; take the
-    // first (largest-t) accepted step — the whole selection is one native
-    // kernel returning the accepted row or NULL (node stays put).
-    live.select(col("id"), col("fu"), col("grad"), col("llh"), col("gnorm2"))
-      .join(neighLlh, Seq("id"))
-      .withColumn("fnew", graft.functions.DenseLineStepExpr.step(
-        col("fu"), col("grad"), col("llh_neigh_new"), stepsLit, sumFc,
-        col("llh"), col("gnorm2"), p.alpha, p.minF, p.maxF))
-      .filter(col("fnew").isNotNull)
-      .select(col("id"), col("fnew"))
-  }
-
-  /** Per-node (llh, gradient, ‖∇‖²) at the current F — the distributed
-    * gradient/LLH kernel, exposed for property tests (brute-force LLH and
-    * finite-difference gradient checks in PropertySpec). */
-  def nodeStates(edges: DataFrame, f: DataFrame, p: Params): DataFrame =
-    nodeState(edges, f, sumF(f, p), p)
-
-  /** Sparse-representation gradient/LLH pass — the v3 large-K path
-    * (bigclamv3-7.scala:17,86,138-150). F rows are (id, fi ARRAY<INT>,
-    * fv ARRAY<DOUBLE>) index/value pairs; per-pair dots cost O(nnz), the
-    * neighbor-gradient aggregation shuffles only non-zero entries
-    * (explode → groupBy(id, dim) → regroup), and density appears only in
-    * the final per-node gradient (inherent: the −sumF background term
-    * touches every community). PropertySpec proves value-equality with the
-    * dense `nodeStates` kernel. */
-  def nodeStatesSparse(edges: DataFrame, fSparse: DataFrame, sumF: Array[Double],
-      p: Params): DataFrame = {
-    val k = p.k
-    val sumFc = litArr(sumF)
-    val fu = fSparse.select(col("id").as("src"), col("fi").as("ui"), col("fv").as("uv"))
-    val fv = fSparse.select(col("id").as("dst"), col("fi").as("vi"), col("fv").as("vv"))
-    val pairs = edges.join(fu, "src").join(fv, "dst")
-      .withColumn("dotv", graft.functions.SparseDotProduct.dot(
-        col("ui"), col("uv"), col("vi"), col("vv")))
-      .withColumn("pc", clipP(exp(-col("dotv")), p))
-      .withColumn("coef", lit(1.0) / (lit(1.0) - col("pc")))
-    // per-node neighbor LLH + the sparse self terms
-    val fuDotSumF = aggregate(
-      zip_with(col("ui"), col("uv"), (i, v) => v * element_at(sumFc, i + 1)),
-      lit(0.0), (acc, x) => acc + x)
-    val fuDotFu = aggregate(
-      zip_with(col("uv"), col("uv"), (a, b) => a * b), lit(0.0), (acc, x) => acc + x)
-    val llhPart = pairs
-      .groupBy(col("src").as("id"))
-      .agg(first(col("ui")).as("ui"), first(col("uv")).as("uv"),
-        sum(log(lit(1.0) - col("pc")) + col("dotv")).as("llh_neigh"))
-      .select(col("id"), col("ui"), col("uv"),
-        (col("llh_neigh") - fuDotSumF + fuDotFu).as("llh"))
-    // sparse neighbor-gradient: only non-zero (node, dim) entries shuffle
-    val gradEntries = pairs
-      .select(col("src").as("id"),
-        explode(arrays_zip(col("vi"), col("vv"))).as("e"), col("coef"))
-      .select(col("id"), col("e.vi").as("dim"), (col("e.vv") * col("coef")).as("g"))
-      .groupBy("id", "dim").agg(sum(col("g")).as("g"))
-      .groupBy("id").agg(map_from_arrays(collect_list(col("dim")), collect_list(col("g"))).as("gm"))
-    val mu = map_from_arrays(col("ui"), col("uv"))
-    llhPart.join(gradEntries, Seq("id"))
-      .select(col("id"), col("llh"),
-        transform(sequence(lit(0), lit(k - 1)), i =>
-          coalesce(element_at(col("gm"), i.cast("int")), lit(0.0)) -
-            element_at(sumFc, i + 1) +
-            coalesce(element_at(mu, i.cast("int")), lit(0.0))).as("grad"))
-  }
-
-  // ---- sparse path: the v3 large-K capability ----------------------------
+  // ---- sparse rows: the fit's one F representation ------------------------
   // (/root/reference/codes/bigclamv3-7.scala:14-15,86 — K=8,385 with breeze
   // SparseVector rows). Dense K=8,385 would shuffle ~67 KB per row through
-  // every join; the sparse fit ships only the non-zero (index, value) pairs,
-  // so per-row payload tracks community membership count (≈ degree after
-  // conductance init), not K.
+  // every join; the fit ships only the non-zero (index, value) pairs, so
+  // per-row payload tracks community membership count (≈ degree after
+  // conductance init), not K. Dense (id, f) rows are a view: toDenseF.
 
   /** (id, f ARRAY<DOUBLE>) → (id, fi ARRAY<INT>, fv ARRAY<DOUBLE>). */
   def toSparse(f: DataFrame): DataFrame =
@@ -644,17 +497,35 @@ object BigClam {
     a
   }
 
-  /** Sparse per-node fit state: (id, ui, uv, llh, gi, gv, gnorm2).
+  /** Sparse per-node fit state: (id, ui, uv, llh, gi, gv, gnorm2) — the
+    * one gradient/LLH kernel every fit runs. Per node u:
+    *   llh(u) = Σ_{v∈N(u)} [log(1 − clip(exp(−Fu·Fv))) + Fu·Fv] − Fu·sumF + Fu·Fu
+    *   ∇(u)   = Σ_{v∈N(u)} Fv/(1 − clip(exp(−Fu·Fv))) − sumF + Fu
+    * PropertySpec checks llh against a brute-force sum and ∇ against finite
+    * differences.
     *
     * The gradient is kept SPARSE on support(fu) ∪ {dims touched by a
     * neighbor}: outside that support the true dense gradient is exactly
     * −sumF[c] ≤ 0 (F ≥ 0 always), and the projected step from fu[c]=0 clips
-    * back to 0 — so truncating it changes nothing about the update. gnorm2
-    * is the PROJECTED-gradient norm ‖P(∇)‖² (see projGrad — the Armijo
-    * bound must match the dense fit): off-support dims are pinned at 0
-    * against a non-positive gradient, so they project to zero and the
-    * whole norm is an O(nnz) fold over the support — no O(K) walk. */
-  private def nodeStateSparse(edges: DataFrame, fs: DataFrame, sumF: Array[Double],
+    * back to 0 — so truncating it changes nothing about the update.
+    *
+    * gnorm2 is the PROJECTED-gradient norm ‖P(∇)‖²: dims pinned at a bound
+    * with the gradient pointing OUT of the box contribute nothing — the
+    * projected step cannot move them. The Armijo sufficient-ascent bound
+    * must use THIS norm, not ∇ᵀ∇: the candidate moves along the projected
+    * direction, so demanding ascent proportional to the full norm (the
+    * reference's literal test, Bigclamv2.scala:144) makes acceptance
+    * structurally impossible whenever clipped dims dominate — with a
+    * deterministic conductance init on Email-Enron (tiny top-K egos, F≈0,
+    * every background dim clipped at 0 with grad −sumF[c]<0) the fit
+    * rejected every step for every node and the LLH stayed exactly flat.
+    * The reference never trips this only because it pads init with dense
+    * RANDOM rows (Bigclamv2.scala:62-63,77-89). On interior points the
+    * projection is the identity, so the two tests agree exactly.
+    * Off-support dims are pinned at 0 against a non-positive gradient, so
+    * they project to zero and the whole norm is an O(nnz) fold over the
+    * support — no O(K) walk. */
+  private[graft] def nodeStateSparse(edges: DataFrame, fs: DataFrame, sumF: Array[Double],
       p: Params, supportCap: Option[Int] = None): DataFrame = {
     val sumFc = litArr(sumF)
     val fu = fs.select(col("id").as("src"), col("fi").as("ui"), col("fv").as("uv"))
@@ -684,7 +555,7 @@ object BigClam {
     val muDotMu = aggregate(col("uv"), lit(0.0), (acc, x) => acc + x * x)
     // left join: a node whose neighbors all carry empty F still has state
     // (its gradient is −sumF + fu on the support) — dropping it would drop
-    // its llh from the history the dense fit reports.
+    // its llh from the fit's history.
     // The whole per-node gradient-state block (support union, the
     // (g − sumF) + fu values, the feasible-direction projection that also
     // drops natural zeros, the optional top-m support cap — still a true
@@ -705,10 +576,18 @@ object BigClam {
         col("st").getField("gnorm2").as("gnorm2"))
   }
 
-  /** Armijo backtracking on sparse rows — same shuffle shape as the dense
-    * `lineSearch` (the 16 candidate neighbor-LLH terms ride as one 16-long
-    * array per edge), but the edge payload is the sparse (ui, uv, gi, gv)
-    * quadruple instead of two dense K-vectors. */
+  /** Armijo backtracking for every node at once; candidate LLH is evaluated
+    * against the OLD F of the neighbors, as the reference does, with the
+    * background term using sumF adjusted for the node's own move
+    * (sumF − fu + fnew, Bigclamv2.scala:141).
+    *
+    * Shuffle shape: the 16 candidate neighbor-LLH terms ride as ONE 16-long
+    * array column per edge, aggregated with the element-wise vector sum —
+    * so the groupBy shuffles |E| rows of 16 doubles, not 16·|E| rows each
+    * dragging a candidate row. The edge payload is the sparse
+    * (ui, uv, gi, gv) quadruple; the new row is recomputed per NODE after
+    * the aggregate, where the Armijo test picks the largest accepted step
+    * (= smallest accepted index, β < 1). */
   private def lineSearchSparse(edges: DataFrame, fs: DataFrame, state: DataFrame,
       sumF: Array[Double], p: Params): DataFrame = {
     val steps = (0 to p.maxBacktracks).map(i => math.pow(p.beta, i))
@@ -759,29 +638,6 @@ object BigClam {
           transform(col("t"), s => s.getField("v")).as("fv"))
     }
 
-  /** Sparse fixed-iteration fit — the reference's v3 large-K capability
-    * (bigclamv3-7.scala:14-15,86: K=8,385) through the same
-    * update/localCheckpoint loop as the dense `fit`. Returns
-    * ((id, fi, fv), LLH history). Identical math to `fit` (PropertySpec
-    * asserts matching histories): the projected step, the Armijo bound
-    * (full dense ‖∇‖²), and the candidate LLH all agree — only the row
-    * representation and shuffle payload differ.
-    *
-    * `supportCap = Some(m)` is the large-K scale knob (the standard BigCLAM
-    * "candidate communities only" practice): each iteration ascends along
-    * only the m largest-|g| feasible gradient coordinates (still a true
-    * ascent direction; the Armijo bound uses the pruned norm) and each
-    * updated row keeps only its m largest factor entries. Per-row payload
-    * and per-edge line-search cost are then O(m), independent of K — the
-    * difference between the r5 uncapped Enron K=1000 run (support densified
-    * to ~K within 2 iterations, >1 h, abandoned) and a bounded fit. With
-    * supportCap >= K the prune is dropped entirely — same code path, so the
-    * fit equals the uncapped one exactly, bit-for-bit (property-tested; a
-    * kept-everything topM prune would still RE-ORDER float ops and drift by
-    * an ulp). The F prune happens after the Armijo-accepted step, so a
-    * pruned entry can cost a little accepted LLH — the per-iteration
-    * histories remain ascending in practice (RealGraphSpec asserts it on a
-    * real subgraph). */
   /** Total LLH as an ORDER-INDEPENDENT reduction: a double sum's value
     * depends on partition merge order, which the scheduler does not fix —
     * two runs of the identical fit can differ in the last ulp (observed
@@ -806,14 +662,42 @@ object BigClam {
     row.getDouble(0)
   }
 
-  /** Both fit entries NPE deep in the loop (sum(llh) over zero rows → null
+  /** The fit NPEs deep in the loop (sum(llh) over zero rows → null
     * getDouble) if handed an empty edge frame — fail fast with a message
     * instead (the empty-input class of bug flagged on connectedComponents
     * in round 6's review). One limit-1 job. */
   private def requireEdges(edges: DataFrame): Unit =
     require(!edges.isEmpty, "BigClam fit requires a non-empty edge set")
 
-  /** `warmStart` replaces the conductance init with a caller-provided
+  /** The BigCLAM fit — the reference's v2 dense loop and its v3 large-K
+    * capability (bigclamv3-7.scala:14-15,86: K=8,385) as ONE optimizer over
+    * sparse (id, fi ARRAY<INT>, fv ARRAY<DOUBLE>) rows: per iteration one
+    * gradient/LLH pass ([[nodeStateSparse]]), one Armijo line search for
+    * every node against the old F ([[lineSearchSparse]]), and a
+    * localCheckpoint of the updated F. Returns ((id, fi, fv), LLH history):
+    * history(i) is the LLH *before* iteration i's update, history(last) the
+    * final LLH; ascent + Armijo ⇒ the history is non-decreasing. Callers
+    * that need dense (id, f) rows take [[toDenseF]] of the result.
+    * `trackHistory = false` skips the per-iteration LLH reductions and the
+    * final gradient pass for callers that only need F.
+    *
+    * `supportCap = Some(m)` is the large-K scale knob (the standard BigCLAM
+    * "candidate communities only" practice): each iteration ascends along
+    * only the m largest-|g| feasible gradient coordinates (still a true
+    * ascent direction; the Armijo bound uses the pruned norm) and each
+    * updated row keeps only its m largest factor entries. Per-row payload
+    * and per-edge line-search cost are then O(m), independent of K — the
+    * difference between the r5 uncapped Enron K=1000 run (support densified
+    * to ~K within 2 iterations, >1 h, abandoned) and a bounded fit. With
+    * supportCap >= K the prune is dropped entirely — same code path, so the
+    * fit equals the uncapped one exactly, bit-for-bit (property-tested; a
+    * kept-everything topM prune would still RE-ORDER float ops and drift by
+    * an ulp). The F prune happens after the Armijo-accepted step, so a
+    * pruned entry can cost a little accepted LLH — the per-iteration
+    * histories remain ascending in practice (RealGraphSpec asserts it on a
+    * real subgraph).
+    *
+    * `warmStart` replaces the conductance init with a caller-provided
     * sparse F (id, fi, fv — one row per node of `edges`): restart a
     * checkpointed model against new data, or (the planted experiments)
     * start from an oracle F to separate landscape problems from init
@@ -1002,142 +886,20 @@ object BigClam {
   def llhSparse(edges: DataFrame, fs: DataFrame, p: Params): Double =
     totalLlh(nodeStateSparse(edges, fs, sumFSparse(fs, p), p))
 
-  /** Column sums of F — K doubles to the driver (the only collect). */
-  def sumF(f: DataFrame, p: Params): Array[Double] = {
-    val vsum = udaf(VectorOps.ArraySumAgg)
-    val r = f.agg(vsum(col("f")).as("s")).collect()(0).getSeq[Double](0)
-    if (r == null || r.isEmpty) new Array[Double](p.k) else r.toArray
-  }
-
-  /** Fixed-iteration fit; returns (F, per-iteration total LLH history —
-    * history(i) is the LLH *before* iteration i's update, history(last) is
-    * the final LLH). Ascent + Armijo ⇒ history is non-decreasing.
-    * `trackHistory = false` skips the per-iteration LLH reductions and the
-    * final full gradient pass (one distributed job per iteration plus one
-    * at the end) for callers that only need F. */
-  def fit(edges: DataFrame, p: Params, iterations: Int,
-      trackHistory: Boolean = true, ranked: Option[DataFrame] = None,
-      initMode: String = "ego",
-      initProbe: InitDiag => Unit = _ => ()): (DataFrame, Seq[Double]) = {
-    requireEdges(edges)
-    // initMode parity with the sparse path (round-14 #5): "ego" keeps the
-    // dense init bit-identical to every recorded run; any other mode goes
-    // through the SAME sparse dispatch (one semantics, two layouts) and is
-    // densified — the dense path only runs at small-K smokes, so the
-    // densify is k doubles per node
-    var f = checkpointF(initMode match {
-      case "ego" =>
-        initProbe(InitDiag("ego", "ego", None))
-        init(edges, p, ranked)
-      case other =>
-        val (fs, diag) = initSparseByMode(edges, p, ranked, other,
-          raceBudget = iterations)
-        initProbe(diag)
-        toDenseF(fs, p.k)
-    })
-    val history = scala.collection.mutable.ArrayBuffer[Double]()
-    for (_ <- 1 to iterations) {
-      val sf = sumF(f, p)
-      val state = nodeState(edges, f, sf, p).persist(StorageLevel.MEMORY_AND_DISK)
-      if (trackHistory)
-        history += totalLlh(state)
-      val updates = lineSearch(edges, f, state, sf, p)
-      val next = checkpointF(f.join(updates, Seq("id"), "left")
-        .select(col("id"), coalesce(col("fnew"), col("f")).as("f")))
-      state.unpersist()
-      f = next
-    }
-    if (trackHistory) {
-      val finalState = nodeState(edges, f, sumF(f, p), p)
-      history += totalLlh(finalState)
-    }
-    (f, history.toSeq)
-  }
-
-  /** Convergence-driven fit: iterate full passes until the relative LLH
-    * change drops below tol — the reference's MBSGD loop
-    * (Bigclamv2.scala:203-219, |1 − LLHnew/LLHold| < 1e-4) — with a hard
-    * iteration cap as a distributed-job budget. Returns (F, LLH history).
-    *
-    * No initMode seam here, deliberately: this entry exists as the
-    * reference-literal dense loop (invariant-pinned in RealGraphSpec /
-    * ModelSelectionSpec) and has no production callers — alternative inits
-    * on the dense path go through [[fit]], which dispatches the same
-    * sparse init machinery and densifies. */
-  def fitConverged(edges: DataFrame, p: Params, maxIterations: Int = 50): (DataFrame, Seq[Double]) = {
-    requireEdges(edges)
-    var f = checkpointF(init(edges, p))
-    val history = scala.collection.mutable.ArrayBuffer[Double]()
-    var llhOld = 0.0 // v3 convention (bigclamv3-7.scala:207): iter 1 never converges spuriously
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIterations) {
-      it += 1
-      val sf = sumF(f, p)
-      val state = nodeState(edges, f, sf, p).persist(StorageLevel.MEMORY_AND_DISK)
-      val llh = totalLlh(state)
-      history += llh
-      if (it > 1 && math.abs(1.0 - llh / llhOld) < p.tol) converged = true
-      else {
-        val next = checkpointF(f.join(lineSearch(edges, f, state, sf, p), Seq("id"), "left")
-          .select(col("id"), coalesce(col("fnew"), col("f")).as("f")))
-        f = next
-      }
-      llhOld = llh
-      state.unpersist()
-    }
-    (f, history.toSeq)
-  }
-
-  /** Model selection over K — the v4 surface (bigclam4-7.scala:16-20,
-    * 116-133, 225-266): walk a log-spaced K grid ascending, fit each K, and
-    * stop when the relative LLH gain over the previous K falls below kTol
-    * (1e-3 at bigclam4-7.scala:259). Conductance seeding is computed once
-    * per graph inside init via the shared seedRank plan. `hotDegCap`
-    * truncates hub egos inside that seeding — on a power-law graph an
-    * uncapped hub expands deg² rows, the one quadratic hazard in the
-    * pipeline; every scale main passes 200, and so should any caller whose
-    * graph has hubs. Returns the chosen (k, F, per-K final LLH). */
-  def selectK(edges: DataFrame, base: Params, minK: Int, maxK: Int, steps: Int,
-      kTol: Double = 1e-3, fitIterations: Int = 3,
-      hotDegCap: Option[Long] = None,
-      retainedProbe: Int => Unit = _ => ()): (Int, DataFrame, Seq[(Int, Double)]) = {
-    requireEdges(edges)
-    val grid = logSpacedK(minK, maxK, steps)
-    // the conductance seed ranking is K-independent: compute it once for the
-    // whole grid (the per-K init only runs the cheap ego joins on top)
-    val ranked = GraphOps.seedRank(edges, hotDegCap).persist(StorageLevel.MEMORY_AND_DISK)
-    // per evaluated K, keep only the LLH scalar (the reference keeps only LLH,
-    // bigclam4-7.scala:259) plus the single best-so-far F — never the full
-    // per-K DataFrame list (a 100-step grid would hold 100 checkpointed factor
-    // matrices alive). `retainedProbe` reports the live-F count per step for
-    // the ModelSelectionSpec memory-bound assertion.
-    var evals = List.empty[(Int, Double)]
-    var best: Option[(Int, Double, DataFrame)] = None
-    var prevLlh = Option.empty[Double]
-    var stop = false
-    for (k <- grid if !stop) {
-      val (f, hist) = fit(edges, base.copy(k = k), fitIterations, ranked = Some(ranked))
-      val llh = hist.last
-      retainedProbe(1 + best.size) // current f + best-so-far: at most 2 alive
-      // LLH is negative; relative gain mirrors the reference's test
-      prevLlh.foreach(pl => if (math.abs(1.0 - llh / pl) < kTol) stop = true)
-      prevLlh = Some(llh)
-      if (best.forall(_._2 < llh)) best = Some((k, llh, f))
-      evals = (k, llh) :: evals
-    }
-    ranked.unpersist() // every fit localCheckpoints its F — safe to drop
-    val (bk, _, bf) = best.get
-    (bk, bf, evals.reverse)
-  }
-
-  /** `selectK` over the sparse fit — the configuration the v4 surface
+  /** Model selection over K — the configuration the v4 surface
     * actually needs at its own scale: the reference's published grid runs
     * K=1000→9000 (bigclam4-7.scala:16-20), far past where dense K-wide rows
     * stay shuffleable, while capped sparse rows keep per-row payload O(m)
-    * regardless of the grid point. Same walk/early-stop/retention contract
-    * as [[selectK]]; `stableTol` additionally bounds each grid point's
-    * iterations by membership stability, making `fitIterations` a cap.
+    * regardless of the grid point. Walk, early stop and retention follow
+    * the reference (bigclam4-7.scala:116-133,225-266): fit each grid K
+    * ascending (conductance seeding computed once per graph via the shared
+    * seedRank plan; `hotDegCap` truncates hub egos inside it — on a
+    * power-law graph an uncapped hub expands deg² rows, so every scale main
+    * passes 200), stop when the relative LLH gain over the previous K falls
+    * below kTol (1e-3 at bigclam4-7.scala:259), and keep only per-K LLH
+    * scalars plus the best-so-far F — never the full per-K DataFrame list.
+    * `stableTol` additionally bounds each grid point's iterations by
+    * membership stability, making `fitIterations` a cap.
     *
     * `criterion` (round-15 item 3 — the modwalk instrument promoted into
     * the selection API) picks what "best K" means:
@@ -1830,10 +1592,15 @@ object BigClam {
       _ => compute.persist(StorageLevel.MEMORY_AND_DISK))
   }
 
+  /** The K=4 smoke fit as a dense (id, f) view. The dense consumers keep
+    * the dense threshold rule ([[communities]]): a row whose support is
+    * empty is assigned community 0, where [[communitiesSparse]] would drop
+    * it — and the smoke fit has such rows. */
   private def smokeFit(s: SparkSession, d: String): DataFrame =
     smokeCached(s, d, "dense-k4") {
-      fit(smokeEdges(s, d), Params(k = 4), iterations = 3,
-        trackHistory = false)._1
+      val p = Params(k = 4)
+      toDenseF(fitSparse(smokeEdges(s, d), p, iterations = 3,
+        trackHistory = false)._1, p.k)
     }
 
   /** [no-oracle] 3 fixed iterations, K=4, deterministic conductance seeds.
@@ -1848,9 +1615,8 @@ object BigClam {
   /** [no-oracle] The v3 sparse path on the same bounded subgraph: K=8,
     * 3 iterations, deterministic conductance seeds, sparse (indices, values)
     * rows end-to-end. Output is the exploded non-zero entries as scalar
-    * (node, c, f_c) rows. BigClamSpec asserts its F matches a dense K=8 fit
-    * at the same iteration count. Cached under its own tag (distinct
-    * (K, iterations) config from the dense smoke). */
+    * (node, c, f_c) rows. Cached under its own tag (distinct
+    * (K, iterations) config from the dense-view smoke). */
   def bigclam_fit_sparse_smoke(s: SparkSession, d: String): DataFrame = {
     val fs = smokeCached(s, d, "sparse-k8") {
       fitSparse(smokeEdges(s, d), Params(k = 8), iterations = 3,
@@ -1975,8 +1741,8 @@ object BigClam {
       import s.implicits._
       val edges = GraphOps.symEdges(GraphOps.rawEdges(s, d, 150))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val (_, _, grid) =
-        selectK(edges, Params(k = 2), minK = 2, maxK = 6, steps = 3, fitIterations = 2)
+      val (_, _, grid) = selectKSparse(edges, Params(k = 2), minK = 2, maxK = 6,
+        steps = 3, fitIterations = 2)
       edges.unpersist() // grid LLHs are already driver-side scalars
       grid.map { case (k, llh) => (k, math.rint(llh * 100) / 100) }
         .toDF("k", "llh")

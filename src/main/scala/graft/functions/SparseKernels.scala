@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * sorted (index, value) arrays — the same treatment [[DotProduct]] gives
   * the dense dot.
   *
-  * Bit-exactness contract (PropertySpec holds fitSparse to the dense fit's
-  * exact LLH history): contributions accumulate in ascending-index order,
-  * exactly like the HOF folds they replace; skipped dims correspond to
+  * Bit-exactness contract (the HOF forms these replaced are the reference;
+  * PropertySpec checks a full fitSparse iteration against a plain-Scala
+  * re-derivation of the step): contributions accumulate in ascending-index
+  * order, exactly like the HOF folds they replace; skipped dims correspond to
   * adding +0.0 in the HOF form, which is an exact FP no-op for the
   * non-negative products involved; clip/exp/log use the same
   * `java.lang.Math` entry points Catalyst's least/greatest/exp/log compile
@@ -254,78 +255,6 @@ object SparseKernels {
       new GenericArrayData(java.util.Arrays.copyOf(ki, n)),
       new GenericArrayData(java.util.Arrays.copyOf(kv, n)),
       gnorm2)
-  }
-
-  /** Dense variant of [[stepTerms]]: per-edge candidate line-search terms
-    * over length-K arrays — the v2 dense path's per-edge hot loop (16 steps
-    * × a K-wide interpreted `zip_with` per edge before this existed).
-    * term_t = log(1 − clip(exp(−Σ_k clip(fu[k]+t·g[k])·fv[k]))) + dot. */
-  def denseStepTerms(fu: ArrayData, g: ArrayData, fv: ArrayData,
-      steps: ArrayData, minF: Double, maxF: Double,
-      minP: Double, maxP: Double): ArrayData = {
-    val k = fu.numElements()
-    val ns = steps.numElements()
-    val terms = new Array[Double](ns)
-    var s = 0
-    while (s < ns) {
-      val t = steps.getDouble(s)
-      var dot = 0.0
-      var j = 0
-      while (j < k) {
-        var x = fu.getDouble(j) + t * g.getDouble(j)
-        if (x < minF) x = minF
-        if (x > maxF) x = maxF
-        dot += x * fv.getDouble(j)
-        j += 1
-      }
-      var pc = StrictMath.exp(-dot)
-      if (pc < minP) pc = minP
-      if (pc > maxP) pc = maxP
-      terms(s) = StrictMath.log(1.0 - pc) + dot
-      s += 1
-    }
-    new GenericArrayData(terms)
-  }
-
-  /** Dense variant of [[lineStep]]: first Armijo-accepted step's new dense
-    * row, or null when no candidate passes. Unlike the sparse kernel the
-    * dots run over every k (including zeros) — exactly like the dense HOF
-    * `dot(fnew, sumF)` they replace, so accumulation is bit-identical. */
-  def denseLineStep(fu: ArrayData, g: ArrayData, terms: ArrayData,
-      steps: ArrayData, sumF: ArrayData, llh: Double, gnorm2: Double,
-      alpha: Double, minF: Double, maxF: Double): ArrayData = {
-    val k = fu.numElements()
-    val ns = steps.numElements()
-    var s = 0
-    while (s < ns) {
-      val t = steps.getDouble(s)
-      var dotSumF = 0.0
-      var dotFu = 0.0
-      var j = 0
-      while (j < k) {
-        var x = fu.getDouble(j) + t * g.getDouble(j)
-        if (x < minF) x = minF
-        if (x > maxF) x = maxF
-        dotSumF += x * sumF.getDouble(j)
-        dotFu += x * fu.getDouble(j)
-        j += 1
-      }
-      val llhNew = terms.getDouble(s) - dotSumF + dotFu
-      if (llhNew >= llh + alpha * t * gnorm2) {
-        val fnew = new Array[Double](k)
-        j = 0
-        while (j < k) {
-          var x = fu.getDouble(j) + t * g.getDouble(j)
-          if (x < minF) x = minF
-          if (x > maxF) x = maxF
-          fnew(j) = x
-          j += 1
-        }
-        return new GenericArrayData(fnew)
-      }
-      s += 1
-    }
-    null
   }
 
   private[functions] def checkIdxVal(pairs: Seq[(Expression, Expression)],
@@ -575,109 +504,4 @@ object SparseGradStateExpr {
       Bridge.expression(ui), Bridge.expression(uv),
       Bridge.expression(gk), Bridge.expression(gvs),
       Bridge.expression(sumF), minF, maxF, cap))
-}
-
-/** Native dense per-edge candidate-step terms (see
-  * [[SparseKernels.denseStepTerms]]). */
-case class DenseStepTermsExpr(fu: Expression, g: Expression, fv: Expression,
-    steps: Expression, minF: Double, maxF: Double, minP: Double, maxP: Double)
-    extends Expression with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(fu, g, fv, steps)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (children.forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects four ARRAY<DOUBLE> inputs")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "dense_step_terms"
-
-  override def eval(input: InternalRow): Any = {
-    val a = fu.eval(input); val b = g.eval(input)
-    val c = fv.eval(input); val d = steps.eval(input)
-    if (a == null || b == null || c == null || d == null) return null
-    SparseKernels.denseStepTerms(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], d.asInstanceOf[ArrayData],
-      minF, maxF, minP, maxP)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DenseStepTermsExpr =
-    copy(fu = newChildren(0), g = newChildren(1), fv = newChildren(2),
-      steps = newChildren(3))
-}
-
-object DenseStepTermsExpr {
-  import org.apache.spark.sql.graftbridge.Bridge
-  def terms(fu: Column, g: Column, fv: Column, steps: Column,
-      minF: Double, maxF: Double, minP: Double, maxP: Double): Column =
-    Bridge.column(DenseStepTermsExpr(
-      Bridge.expression(fu), Bridge.expression(g), Bridge.expression(fv),
-      Bridge.expression(steps), minF, maxF, minP, maxP))
-}
-
-/** Native dense per-node Armijo step selection (see
-  * [[SparseKernels.denseLineStep]]): the accepted step's new dense row, or
-  * NULL when no candidate passes. */
-case class DenseLineStepExpr(fu: Expression, g: Expression, terms: Expression,
-    steps: Expression, sumF: Expression, llh: Expression, gnorm2: Expression,
-    alpha: Double, minF: Double, maxF: Double)
-    extends Expression with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(fu, g, terms, steps, sumF, llh, gnorm2)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val arrOk = Seq(fu, g, terms, steps, sumF).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (arrOk && llh.dataType == DoubleType && gnorm2.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects five ARRAY<DOUBLE> inputs and DOUBLE llh/gnorm2")
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "dense_line_step"
-
-  override def eval(input: InternalRow): Any = {
-    val vals = new Array[AnyRef](7)
-    var i = 0
-    while (i < 7) {
-      val v = children(i).eval(input)
-      if (v == null) return null
-      vals(i) = v.asInstanceOf[AnyRef]
-      i += 1
-    }
-    SparseKernels.denseLineStep(
-      vals(0).asInstanceOf[ArrayData], vals(1).asInstanceOf[ArrayData],
-      vals(2).asInstanceOf[ArrayData], vals(3).asInstanceOf[ArrayData],
-      vals(4).asInstanceOf[ArrayData],
-      vals(5).asInstanceOf[Double], vals(6).asInstanceOf[Double],
-      alpha, minF, maxF)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DenseLineStepExpr =
-    copy(fu = newChildren(0), g = newChildren(1), terms = newChildren(2),
-      steps = newChildren(3), sumF = newChildren(4), llh = newChildren(5),
-      gnorm2 = newChildren(6))
-}
-
-object DenseLineStepExpr {
-  import org.apache.spark.sql.graftbridge.Bridge
-  def step(fu: Column, g: Column, terms: Column, steps: Column, sumF: Column,
-      llh: Column, gnorm2: Column,
-      alpha: Double, minF: Double, maxF: Double): Column =
-    Bridge.column(DenseLineStepExpr(
-      Bridge.expression(fu), Bridge.expression(g), Bridge.expression(terms),
-      Bridge.expression(steps), Bridge.expression(sumF),
-      Bridge.expression(llh), Bridge.expression(gnorm2), alpha, minF, maxF))
 }

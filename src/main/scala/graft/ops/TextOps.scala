@@ -270,15 +270,9 @@ object TextOps {
       .select(when(isNewId(col("doc_a")), col("doc_a")).otherwise(col("doc_b"))
         .as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // r18: broadcast the near-dup counts into the final left join — the
-    // planner was sort-merge-joining it (unknown stats on the blocked-pair
-    // subtree), paying an exchange + two sorts of the batch frame for a
-    // right side that is one row per near-duplicated NEW doc. Same scale
-    // class as the exact-bit side the planner already broadcasts: bounded
-    // by the daily batch's duplicated subset, not the corpus.
     newDocs.select(col("doc_id"))
       .join(exact, Seq("doc_id"), "left")
-      .join(near.hint("broadcast"), Seq("doc_id"), "left")
+      .join(near, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("is_exact"), lit(0L)).as("is_exact_dup"),
         coalesce(col("n"), lit(0L)).as("n_near"),

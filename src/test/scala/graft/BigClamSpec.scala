@@ -17,8 +17,12 @@ class BigClamSpec extends AnyFunSuite {
     Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L), (4L, 5L), (3L, 5L), (2L, 3L))
       .toDF("src", "dst")).cache()
 
+  /** Dense (id, f) rows of a fitSparse fit — the view dense callers read. */
+  private def denseFit(k: Int, iterations: Int) = BigClam.toDenseF(
+    BigClam.fitSparse(edges, BigClam.Params(k = k), iterations)._1, k)
+
   test("LLH is non-decreasing over fit iterations on the toy graph") {
-    val (_, history) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 3)
+    val (_, history) = BigClam.fitSparse(edges, BigClam.Params(k = 2), iterations = 3)
     assert(history.size == 4)
     history.sliding(2).foreach { case Seq(a, b) =>
       assert(b >= a - 1e-9, s"LLH decreased: $history")
@@ -26,14 +30,14 @@ class BigClamSpec extends AnyFunSuite {
   }
 
   test("factor entries stay within [minF, maxF] and are finite") {
-    val (f, _) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 3)
+    val f = denseFit(k = 2, iterations = 3)
     val vals = f.select(explode(col("f"))).as[Double].collect()
     assert(vals.nonEmpty)
     assert(vals.forall(v => !v.isNaN && !v.isInfinite && v >= 0.0 && v <= 1000.0))
   }
 
   test("communities cover all nodes with ids < K and recover the planted split") {
-    val (f, _) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 5)
+    val f = denseFit(k = 2, iterations = 5)
     val com = BigClam.communities(f, edges, BigClam.Params(k = 2))
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Int]("community"))
     assert(com.map(_._1).toSet == Set(0L, 1L, 2L, 3L, 4L, 5L))
@@ -72,7 +76,7 @@ class BigClamSpec extends AnyFunSuite {
   }
 
   test("communityMembers inverts communities: every node listed once per membership, csv sorted") {
-    val (f, _) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 5)
+    val f = denseFit(k = 2, iterations = 5)
     val p = BigClam.Params(k = 2)
     val com = BigClam.communities(f, edges, p).collect()
       .map(r => (r.getAs[Long]("node"), r.getAs[Int]("community")))
@@ -97,26 +101,6 @@ class BigClamSpec extends AnyFunSuite {
     assert(BigClam.bigclam_communities(s2, TestSpark.sf).limit(1).collect().nonEmpty)
   }
 
-  test("bigclam_fit_sparse_smoke matches a dense K=8 fit at the same iterations") {
-    val smoke = GraphOps.symEdges(GraphOps.rawEdges(s, TestSpark.sf, 300)).cache()
-    val (fd, _) = BigClam.fit(smoke, BigClam.Params(k = 8), iterations = 3,
-      trackHistory = false)
-    val dense = fd.select("id", "f").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val sparseRows = BigClam.bigclam_fit_sparse_smoke(s, TestSpark.sf).collect()
-      .map(r => (r.getAs[Long]("node"), r.getAs[Int]("c")) -> r.getAs[Double]("f_c")).toMap
-    smoke.unpersist()
-    assert(sparseRows.nonEmpty)
-    // every declared sparse entry equals the dense value (rounded to 4)
-    sparseRows.foreach { case ((node, c), v) =>
-      assert(math.abs(dense(node)(c) - v) < 1e-3,
-        s"sparse ($node,$c)=$v vs dense ${dense(node)(c)}")
-    }
-    // every non-trivial dense entry is present in the sparse output
-    for ((id, f) <- dense; c <- f.indices if math.abs(f(c)) > 1e-3)
-      assert(sparseRows.contains((id, c)), s"dense non-zero ($id,$c)=${f(c)} missing")
-  }
-
   test("all three dense smoke consumers share one cached fit per session") {
     val before = BigClam.smokeCacheSize
     BigClam.bigclam_fit_smoke(s, TestSpark.sf).limit(1).collect()
@@ -129,9 +113,9 @@ class BigClamSpec extends AnyFunSuite {
   test("localCheckpoint keeps the plan flat: 12-iteration F plan == 3-iteration F plan") {
     // the lineage guard (round-3 lesson): without the per-iteration
     // localCheckpoint the logical plan would grow with the iteration count
-    val (f3, _) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 3,
+    val (f3, _) = BigClam.fitSparse(edges, BigClam.Params(k = 2), iterations = 3,
       trackHistory = false)
-    val (f12, _) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 12,
+    val (f12, _) = BigClam.fitSparse(edges, BigClam.Params(k = 2), iterations = 12,
       trackHistory = false)
     def planSize(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.collect { case n => n }.size
@@ -155,10 +139,10 @@ class BigClamSpec extends AnyFunSuite {
     import sess.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     val e1 = intercept[IllegalArgumentException](
-      BigClam.fit(empty, BigClam.Params(k = 2), 1))
+      BigClam.fitSparse(empty, BigClam.Params(k = 2), 1))
     assert(e1.getMessage.contains("non-empty edge set"))
     val e2 = intercept[IllegalArgumentException](
-      BigClam.fitSparse(empty, BigClam.Params(k = 2), 1))
+      BigClam.selectKSparse(empty, BigClam.Params(k = 2), 2, 4, 2))
     assert(e2.getMessage.contains("non-empty edge set"))
   }
 }

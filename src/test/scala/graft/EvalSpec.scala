@@ -281,8 +281,9 @@ class EvalSpec extends AnyFunSuite {
     val edges = GraphOps.symEdges(
       Seq((0L, 1L), (1L, 2L), (0L, 2L), (3L, 4L), (4L, 5L), (3L, 5L))
         .toDF("src", "dst")).cache()
-    val (f, _) = BigClam.fit(edges, BigClam.Params(k = 2), iterations = 5)
-    val fitted = BigClam.communities(f, edges, BigClam.Params(k = 2))
+    val (fs, _) = BigClam.fitSparse(edges, BigClam.Params(k = 2), iterations = 5)
+    val fitted = BigClam.communities(BigClam.toDenseF(fs, 2), edges,
+      BigClam.Params(k = 2))
     val truthCc = GraphOps.connectedComponents(edges)
       .select(col("comp").as("community"), col("node"))
     val score = f1Of(fitted, truthCc)

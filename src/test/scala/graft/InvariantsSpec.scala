@@ -315,16 +315,20 @@ class InvariantsSpec extends AnyFunSuite {
     val before = s.sparkContext.getPersistentRDDs.keySet
     TextOps.q_dedup_shingle(s, sf).collect()
     val after = s.sparkContext.getPersistentRDDs
-    // r18: the query intentionally materializes the shingle relation ONCE
-    // via localCheckpoint (docShinglesParted) — checkpoint blocks are
-    // registered until the ContextCleaner GC-releases them, which is the
-    // q_dedup_cluster design this suite has always accepted. The round-3
-    // leak this test pins was an explicit .cache() no one released: still
-    // guarded — any NEW persisted RDD must be a local checkpoint.
-    val leaked = (after.keySet -- before)
-      .filterNot(id => after(id).isCheckpointed)
+    // the query intentionally materializes the shingle relation ONCE via
+    // localCheckpoint (docShinglesParted) — checkpoint blocks stay
+    // registered until the ContextCleaner GC-releases them. The round-3
+    // leak this test pins was an explicit .cache() no one released: any
+    // NEW persisted RDD must be a local checkpoint, and one call creates
+    // exactly one (measured: 1 new checkpointed RDD per call), so a second
+    // checkpoint per call fails here instead of accumulating unnoticed.
+    val fresh = after.keySet -- before
+    val leaked = fresh.filterNot(id => after(id).isCheckpointed)
     assert(leaked.isEmpty,
       s"q_dedup_shingle leaked non-checkpoint persisted RDDs: $leaked")
+    val checkpointed = fresh.count(id => after(id).isCheckpointed)
+    assert(checkpointed <= 1,
+      s"q_dedup_shingle created $checkpointed checkpointed RDDs, expected <= 1")
   }
 
   test("q_events_streak: islands partition each user's active days") {

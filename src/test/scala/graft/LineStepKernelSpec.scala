@@ -65,23 +65,4 @@ class LineStepKernelSpec extends AnyFunSuite {
     assert(st.getArray(0).toIntArray().toSeq == Seq(0, 1))
     assert(st.getArray(1).toDoubleArray().toSeq == Seq(2.5, 3.5))
   }
-
-  test("denseLineStep returns null on no acceptance, else the clipped row") {
-    val none = SparseKernels.denseLineStep(
-      dbls(0.5, 0.5), dbls(1.0, -1.0), dbls(-1e18, -1e18, -1e18), steps,
-      dbls(1.0, 1.0), 0.0, 2.0, 0.05, 0.0, 1000.0)
-    assert(none == null)
-    val r = SparseKernels.denseLineStep(
-      dbls(0.5, 0.5), dbls(1.0, -1.0), dbls(1e18, 1e18, 1e18), steps,
-      dbls(0.0, 0.0), 0.0, 0.0, 0.05, 0.0, 1000.0)
-    assert(r.toDoubleArray().toSeq == Seq(1.5, 0.0)) // t=1: clip(0.5-1)=0
-  }
-
-  test("denseStepTerms matches a hand computation at one step") {
-    val t = SparseKernels.denseStepTerms(
-      dbls(0.5), dbls(1.0), dbls(2.0), dbls(1.0), 0.0, 1000.0, 1e-10, 0.9999)
-    val dot = 1.5 * 2.0
-    val exp = StrictMath.log(1.0 - StrictMath.exp(-dot)) + dot
-    assert(t.toDoubleArray()(0) == exp)
-  }
 }

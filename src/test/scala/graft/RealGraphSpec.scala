@@ -74,19 +74,19 @@ class RealGraphSpec extends AnyFunSuite {
     sym.unpersist()
   }
 
-  test("fitConverged stays checkpoint-flat over a long run on a real subgraph") {
+  test("fitSparse stays checkpoint-flat over a long run on a real subgraph") {
     assume(available)
     val raw = GraphOps.loadEdgeList(s, path)
       .filter(col("src") < 300 && col("dst") < 300)
     val sym = GraphOps.symEdges(raw).cache()
-    // tol=0 never converges: runs all 12 iterations — the long-fit shape
-    val (f, hist) = BigClam.fitConverged(sym, BigClam.Params(k = 3, tol = 0.0),
-      maxIterations = 12)
-    assert(hist.size == 12)
+    // no llhTol: runs all 12 iterations — the long-fit shape; the history
+    // holds the 12 pre-update measures plus the final one
+    val (f, hist) = BigClam.fitSparse(sym, BigClam.Params(k = 3), iterations = 12)
+    assert(hist.size == 13)
     assert(hist.last > hist.head)
     // lineage stays truncated regardless of iteration count
     val planSize = f.queryExecution.optimizedPlan.collect { case n => n }.size
-    assert(planSize <= 5, s"12-iteration fitConverged plan not flat: $planSize")
+    assert(planSize <= 5, s"12-iteration fit plan not flat: $planSize")
     sym.unpersist()
   }
 
@@ -97,7 +97,7 @@ class RealGraphSpec extends AnyFunSuite {
     val raw = GraphOps.loadEdgeList(s, path)
       .filter(col("src") < 600 && col("dst") < 600)
     val sym = GraphOps.symEdges(raw).cache()
-    val (f, hist) = BigClam.fit(sym, BigClam.Params(k = 4), iterations = 2)
+    val (f, hist) = BigClam.fitSparse(sym, BigClam.Params(k = 4), iterations = 2)
     assert(hist.forall(v => !v.isNaN && !v.isInfinite))
     assert(hist.last > hist.head) // net ascent over the fit
     val nNodes = sym.select("src").distinct().count()

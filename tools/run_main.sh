@@ -9,6 +9,9 @@
 # fit may never GC, so spill accumulates ~1 GB/iteration until the disk
 # fills (killed the first round-16 capstone walk at 69 iterations).
 set -euo pipefail
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+# the Spark jar directory build.sbt compiles against (its unmanagedBase)
+SPARK_JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
 CLS=$1; shift
 # Wipe guard (round-16 item 5): the driver wipes target/ between rounds and
 # can leave STUB Bench/Verify/SparkEntry classes with an empty query map — a
@@ -16,7 +19,7 @@ CLS=$1; shift
 # (it killed the round-15 fresh-boot pair). The stubs never include the ops
 # package, so its absence = not the compiled library. Checked here rather
 # than in Bench's main because the stub Bench wouldn't contain the check.
-if [ ! -f /root/repo/target/scala-2.13/classes/graft/ops/Relational.class ]; then
+if [ ! -f "$ROOT/target/scala-2.13/classes/graft/ops/Relational.class" ]; then
   echo "run_main ABORT: target/scala-2.13/classes is missing graft/ops —" \
     "these are the driver's stub classes (or an empty target/), not the" \
     "compiled library. Run 'sbt -batch compile' first." >&2
@@ -40,5 +43,5 @@ exec java -Xmx"${GRAFT_XMX:-96g}" -XX:+UseG1GC \
   --enable-native-access=ALL-UNNAMED \
   -Dderby.system.home=/tmp/derby \
   -Dspark.cleaner.periodicGC.interval=5min \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_JARS/*" \
   "$CLS" "$@"
