@@ -417,7 +417,7 @@ object BigClam {
     def splitCover() = {
       val spread = GraphOps.rankTopSeedsSpread(
         ranked.getOrElse(GraphOps.seedRank(edges)), edges, 2 * p.k)
-      GraphOps.egoSplitCover(edges, spread, p.k, method = "lpa")
+      GraphOps.egoSplitCover(edges, spread, p.k)
     }
     val out = initMode match {
       case "ego" => (initSparse(edges, p, ranked), InitDiag("ego", "ego", None))
@@ -615,7 +615,7 @@ object BigClam {
     // (16-step filter × fnew transform × two aggregate folds, each probing
     // a map literal REBUILT per element) was O(steps·nnz²) interpreted
     // evals per node — the measured dominant iteration cost once the
-    // per-edge terms went native (98k-node RunSynth probe: ~1040 s/iter)
+    // per-edge terms went native (98k-node power-law probe: ~1040 s/iter)
     live.join(neighLlh, Seq("id"))
       .withColumn("upd", graft.functions.SparseLineStepExpr.step(
         col("ui"), col("uv"), col("gi"), col("gv"),

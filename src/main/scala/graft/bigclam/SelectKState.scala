@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its first two attempts died to ENVIRONMENT — disk spill, a concurrent
   * JVM — not to the model). Restarting such a walk from zero re-pays
   * every completed fit. This store persists each completed grid point as
-  * it lands — the cross-JVM analog of what `RunIncrementalDedup` already
+  * it lands — the cross-JVM analog of what [[graft.ops.IncrementalDedup]]
   * does for dedup state:
   *
   *  - `meta.properties` — the walk parameters that determine the curve

@@ -118,7 +118,7 @@ object SparseKernels {
     * ui, uv), i)`) whose map literal was REBUILT per element probe —
     * O(steps · nnz²) interpreted boxed evals per node, the measured
     * dominant cost of a sparse iteration once the per-edge terms went
-    * native (98k-node probe: ~1040 s/iter before, see RunSynth). Bit-exact:
+    * native (98k-node power-law probe: ~1040 s/iter before). Bit-exact:
     * ascending-index accumulation, same clip comparisons, and dropped
     * zeros match the HOF's `filter(v =!= 0.0)` (Java `-0.0 != 0.0` is
     * false, exactly like Catalyst's equality there). */

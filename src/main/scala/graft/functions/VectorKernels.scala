@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * each traversing the vector array from scratch, so one assignment pass
   * costs k array walks plus a k-way struct comparison tree, and the plan
   * grows linearly in k (a 256-cell quantizer broadcast a ~1.2 MB task
-  * binary and dominated RunSemanticScale's 1M-vector wall time). This
+  * binary and dominated the 1M-vector semantic-dedup wall time). This
   * kernel computes ALL k cosines in ONE loop over the vector (centroids
   * ride along as a plan-referenced object, the broadcast-small-model
   * pattern), returning struct(cell, sim).

@@ -336,36 +336,37 @@ object GraphOps {
   }
 
   /** Ego-splitting personas (the local-clustering step of Epasto et al.,
-    * "Ego-splitting framework", KDD 2017 — here used as a cold-start INIT
-    * device, not a full persona-graph pipeline): for each seed, partition
-    * the seed's ego-minus-seed vertex set into connected components of the
-    * TRIANGLE-support graph — u,v in the same component iff a path of pairs
-    * connects them where each pair (x,y) has x,y ∈ N(seed) AND (x,y) ∈ E,
-    * i.e. {seed,x,y} is a triangle. Motivation (round-12 planted-cover
-    * diagnosis): a seed belonging to 2-3 overlapping communities BLENDS
-    * them into one ego init column and every cold fit collapses (staged
-    * best F1 0.44 vs warm-start 1.0); the communities are near-disconnected
-    * from each other INSIDE the ego (two communities sharing only the seed
-    * contribute no triangle through it), so triangle-support components
-    * recover single-community subsets before the fit ever starts.
+    * "Ego-splitting framework", KDD 2017 — here a cold-start INIT device,
+    * not a full persona-graph pipeline): for each seed, label propagation
+    * over the seed's TRIANGLE-support graph — u,v ∈ N(seed) linked iff
+    * (u,v) ∈ E, i.e. {seed,u,v} is a triangle. A seed in 2-3 overlapping
+    * communities would otherwise BLEND them into one ego init column; the
+    * communities are near-disconnected inside the ego (two communities
+    * sharing only the seed contribute no triangle through it), and LPA
+    * also resists a node in A∩B bridging them: each round every member
+    * adopts the plurality label of its support neighbors plus itself, so
+    * a bridge falls to its denser side while both sides keep their own
+    * labels (connected components merge through such a bridge — round 13
+    * measured mean column purity 0.396 under components on the 10k/100
+    * cover).
     *
-    * Returns (seed, u, comp): one row per ego member, comp = min member id
-    * of its component (members in no triangle with any co-member are
-    * singleton components). Scale shape: ego membership is one |E|-row join
-    * against the broadcast seed list; the support-edge build is the
-    * standard triangle join (edge ⋈ ego ⋈ ego keyed on endpoints — linear
-    * in triangles through seeds, never degree² per ego); the component loop
-    * is the connectedComponents hash-min + pointer-jump idiom keyed by
-    * (seed, node), lineage-cut per round with the Σlabel fixpoint witness.
-    * Ego diameters are tiny (dense communities), so rounds ≈ 3-4. */
-  /** Shared ego machinery for the persona splitters: `nbr` = (seed, u) ego
-    * membership (one |E|-row join against the broadcast seed list) and
-    * `support` = (seed, u, v) triangle-support edges (u,v ∈ N(seed) and
-    * (u,v) ∈ E — the standard triangle join, linear in triangles through
-    * seeds, never degree² per ego). Both lineage-cut: every splitter
-    * iterates over them. */
-  private def egoSupport(edges: DataFrame, seedIds: DataFrame)
-      : (DataFrame, DataFrame) = {
+    * Deterministic by construction: synchronous rounds, plurality broken
+    * by (count desc, label asc) via one min(struct) agg, self-vote breaks
+    * the classic 2-cycle oscillation, and the round count is FIXED (LPA
+    * has no monotone witness, so a fixpoint loop could cycle; bounded
+    * rounds keep the output a pure function of the graph). Round 1 from
+    * singleton labels is exactly one hash-min step; plurality takes over
+    * once labels coalesce.
+    *
+    * Returns (seed, u, comp): one row per ego member; comp values are
+    * label ids, with no connectivity guarantee (harmless for init-column
+    * use), and members in no triangle with a co-member keep their own id.
+    * Scale shape: ego membership is one |E|-row join against the broadcast
+    * seed list, and the support-edge build is the standard triangle join
+    * (linear in triangles through seeds, never degree² per ego); both are
+    * lineage-cut because every round reads them. */
+  private[graft] def egoSplitPersonasLPA(edges: DataFrame, seedIds: DataFrame,
+      rounds: Int = 8): DataFrame = {
     val nbr = cutLineage(
       edges.join(broadcast(seedIds.select(col("seed"))), col("src") === col("seed"))
         .select(col("seed"), col("dst").as("u")))
@@ -374,70 +375,6 @@ object GraphOps {
         .join(nbr, Seq("u"))
         .join(nbr.select(col("seed"), col("u").as("v")), Seq("seed", "v"))
         .select(col("seed"), col("u"), col("v")))
-    (nbr, support)
-  }
-
-  private[graft] def egoSplitPersonas(edges: DataFrame, seedIds: DataFrame,
-      maxIter: Int = 20): DataFrame = {
-    val (nbr, support) = egoSupport(edges, seedIds)
-    var labels = cutLineage(nbr.select(col("seed"), col("u"), col("u").as("comp")))
-    def labelSum(df: DataFrame): Long = {
-      val row = df.agg(sum(col("comp"))).collect()(0)
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
-    var prevSum = labelSum(labels)
-    var changed = true
-    var it = 0
-    while (changed && it < maxIter) {
-      val neighborMin = support
-        .join(labels.select(col("seed"), col("u").as("v"), col("comp")),
-          Seq("seed", "v"))
-        .select(col("seed"), col("u"), col("comp"))
-      val folded = neighborMin.union(labels.select(col("seed"), col("u"), col("comp")))
-        .groupBy("seed", "u").agg(min(col("comp")).as("comp"))
-      // pointer jump through the CHECKPOINTED labels (see
-      // connectedComponents for why not through folded itself)
-      val jumped = folded
-        .join(labels.select(col("seed"), col("u").as("comp"), col("comp").as("jump")),
-          Seq("seed", "comp"))
-        .select(col("seed"), col("u"), col("jump").as("comp"))
-      val next = cutLineage(jumped)
-      val s = labelSum(next)
-      changed = s != prevSum
-      prevSum = s
-      labels = next
-      it += 1
-    }
-    if (changed)
-      throw new IllegalStateException(
-        s"egoSplitPersonas did not converge within $maxIter rounds")
-    labels
-  }
-
-  /** LPA persona splitter — the overlap-robust variant of
-    * [[egoSplitPersonas]]. Connected components under-split dense
-    * overlapping covers: a single node in A∩B (any co-member of both
-    * communities inside the ego) bridges A's and B's triangle-support
-    * components into one, and the measured result is blended init columns
-    * (round-13 10k/100 run: mean column purity 0.396 under CC). Label
-    * propagation on the SAME support graph resists node bridges: each
-    * round every member adopts the plurality label of its support
-    * neighbors plus itself, so a bridge node falls to its denser side
-    * while both sides keep their own labels (this is the partition
-    * algorithm Epasto et al. recommend over components for noisy egos).
-    *
-    * Deterministic by construction: synchronous rounds, plurality broken
-    * by (count desc, label asc) via one min(struct) agg, self-vote breaks
-    * the classic 2-cycle oscillation, and the round count is FIXED (LPA
-    * has no monotone witness, so a fixpoint loop could cycle; bounded
-    * rounds keep the output a pure function of the graph). Round 1 from
-    * singleton labels is exactly one hash-min step; plurality takes over
-    * once labels coalesce. Returns (seed, u, comp) like the CC splitter —
-    * comp values are label ids, with no connectivity guarantee (harmless
-    * for init-column use). */
-  private[graft] def egoSplitPersonasLPA(edges: DataFrame, seedIds: DataFrame,
-      rounds: Int = 8): DataFrame = {
-    val (nbr, support) = egoSupport(edges, seedIds)
     var labels = cutLineage(nbr.select(col("seed"), col("u"), col("u").as("comp")))
     var it = 0
     while (it < rounds) {
@@ -500,7 +437,7 @@ object GraphOps {
     * plus a [[CoverDiag]] recording which allocator ran and what it covered.
     * Candidate personas come from `rankedSeeds` (seed, phi, rank — e.g.
     * [[rankTopSeedsSpread]] output): each seed's ego splits into triangle-
-    * support components ([[egoSplitPersonas]]); components of size <
+    * support personas ([[egoSplitPersonasLPA]]); personas of size <
     * `minCompSize` are dropped UNLESS the seed has no qualifying component
     * at all, in which case its whole ego is one fallback persona (a
     * triangle-free ego gives only singletons — a blended whole-ego column
@@ -530,16 +467,10 @@ object GraphOps {
     * with near-linear work, picking the IDENTICAL sequence. */
   private[graft] def egoSplitCover(edges: DataFrame, rankedSeeds: DataFrame,
       k: Int, minCompSize: Int = 2,
-      maxCollectRows: Long = 8000000L,
-      method: String = "cc"): (DataFrame, CoverDiag) = {
+      maxCollectRows: Long = 8000000L): (DataFrame, CoverDiag) = {
     val s = edges.sparkSession
     import s.implicits._
-    val personas0 = method match {
-      case "cc"  => egoSplitPersonas(edges, rankedSeeds.select(col("seed")))
-      case "lpa" => egoSplitPersonasLPA(edges, rankedSeeds.select(col("seed")))
-      case other => throw new IllegalArgumentException(
-        s"egoSplitCover method must be cc or lpa, got $other")
-    }
+    val personas0 = egoSplitPersonasLPA(edges, rankedSeeds.select(col("seed")))
     val sized = personas0.groupBy("seed", "comp").agg(count(lit(1)).as("sz"))
     val seedMax = sized.groupBy("seed").agg(max(col("sz")).as("mx"))
     val qualifying = sized.join(seedMax, Seq("seed"))
@@ -1401,7 +1332,7 @@ object GraphOps {
   }
 
   /** Core of [[q_graph_assortativity]] over any symmetrized edge frame —
-    * separated so scale runs (RunGraphScale) can drive it on synthetic
+    * separated so `graft.Run graph` can drive it on synthetic
     * multi-million-node graphs. */
   def assortativity(e: DataFrame): DataFrame = {
     // r18 restructure (guide §1.1 first-principles + §2.4): the former
@@ -1409,8 +1340,8 @@ object GraphOps {
     // agg + two endpoint joins) and relied on ReuseExchange to compute the
     // union+distinct once — which fired at sf0.001/4 but NOT under the
     // driver's sf0.1/32 config (r17 verdict: flat 2.06 s, the slowest
-    // bench row; ProfileQ showed the two ~5 task-s symmetrize stages
-    // running twice). Only sxy = Σ_E d(src)·d(dst) genuinely needs joint
+    // bench row; its job/stage profile showed the two ~5 task-s
+    // symmetrize stages running twice). Only sxy = Σ_E d(src)·d(dst) genuinely needs joint
     // edge-level degree info; every other moment is a degree-vector
     // functional. So: ONE dst-keyed exchange up front, degrees and the
     // degree-attach join both consume that partitioning shuffle-free

@@ -268,7 +268,7 @@ object MultimodalOps {
     * while the row-padding garbage is ID-keyed — so family members carry
     * pixel-identical but byte-DIFFERENT frame payloads (the re-encode
     * shape that defeats raw-byte fingerprinting). Frame counts stay
-    * id-dependent (4-11). Shared by [[videoTable]] and RunMediaScale. */
+    * id-dependent (4-11). */
   private[graft] def synthVideoRow(id: Long): VideoRow = {
     val fam = videoFamilyKey(id)
     val (w, h) = videoDims(fam)
@@ -368,14 +368,13 @@ object MultimodalOps {
     * (media_id, fh) rows enter the shuffle. xxhash64 LONG fingerprints,
     * not md5 strings: the hash is internal (nothing cross-engine reads
     * it), and an 8-byte key vs a 32-char string shrinks every shuffle in
-    * the pipeline — measured 368 s → 322 s at 10M media (see
-    * RunMediaScale). Collision exposure differs per consumer: the
-    * n_shared >= 2 dedup pairs need 2+ collisions onto the SAME media
-    * pair (negligible²), but [[frameDedupExistencePairs]]'s n_shared >= 1
-    * drop-list means a SINGLE xxhash64 collision inside a blocking band
-    * creates one false dup pair — still ~N_blocked_pairs/2^64 (harmless
-    * at any realistic band size; widen the fingerprint if a drop-list
-    * consumer can't tolerate it). */
+    * the pipeline — measured 368 s → 322 s at 10M media. Collision exposure
+    * differs per consumer: the n_shared >= 2 dedup pairs need 2+ collisions
+    * onto the SAME media pair (negligible²), but
+    * [[frameDedupExistencePairs]]'s n_shared >= 1 drop-list means a SINGLE
+    * xxhash64 collision inside a blocking band creates one false dup pair —
+    * still ~N_blocked_pairs/2^64 (harmless at any realistic band size;
+    * widen the fingerprint if a drop-list consumer can't tolerate it). */
   private def framePairCandidates(videos: DataFrame): DataFrame = {
     val s = videos.sparkSession
     import s.implicits._

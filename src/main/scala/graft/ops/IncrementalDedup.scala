@@ -132,7 +132,7 @@ object IncrementalDedup {
     * postings/decisions plans re-list the hashes dir would feed the batch
     * its own hashes back — every doc flips to exact-dup in the persisted
     * decisions while the in-memory stats said otherwise (caught by the
-    * first two-JVM run of RunIncrementalDedup). */
+    * first two-JVM `graft.Run dedup` run). */
   def appendState(dir: String, batch: Long, r: BatchResult): Unit = {
     val h = r.acceptedHashes.localCheckpoint(true)
     val p = r.acceptedPostings.localCheckpoint(true)

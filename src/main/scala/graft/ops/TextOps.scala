@@ -317,9 +317,7 @@ object TextOps {
       .orderBy("doc_id")
       .limit(5000)
 
-  /** Core of [[q_dedup_lines]] over any (doc_id, text) frame — separated so
-    * the composed pipeline (RunTextPipeline) can apply the repeated-line
-    * rule to its own survivor set. */
+  /** Core of [[q_dedup_lines]] over any (doc_id, text) frame. */
   private[graft] def lineDedupStats(docs: DataFrame): DataFrame = {
     val t = toks(col("text"))
     val lines = docs

@@ -238,21 +238,6 @@ object VectorOps {
         s => -s.getField("nid"))).as("cell"))
   }
 
-  /** EVERY cell with its per-probe rank (1 = nearest) — the full-ranking
-    * variant of [[ivfProbeCellsWith]] an nprobe SWEEP reads once: since a
-    * candidate lives in exactly one cell, filtering `cellrank <= p` on the
-    * (probe × candidate) join replays any operating point of the sweep
-    * from a single all-pairs pass instead of one join per nprobe value. */
-  private[graft] def ivfProbeCellsRankedAll(emb: DataFrame,
-      cents: Array[(Long, Array[Double], Double)]): DataFrame = {
-    val sims = centroidSims(cents)
-    emb.select(col("vec_id"), col("v"), col("nrm"),
-        posexplode(transform(reverse(array_sort(array(sims: _*))),
-          s => -s.getField("nid"))).as(Seq("pos", "cell")))
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
-        (col("pos") + 1).cast("int").as("cellrank"))
-  }
-
   /** IVF top-k ANN: candidates live in their one nearest cell, each probe
     * searches its `nprobe` nearest cells, exact cosine + top-3 within the
     * probed set. A candidate appears in exactly one cell, so the
@@ -578,8 +563,8 @@ object VectorOps {
   /** [no-oracle] The sub-bucketed twin of [[q_dedup_semantic]] — the
     * declared 100 TB shape: candidate blocks are (k-means cell, 4-bit
     * sign-LSH sub-bucket) instead of the cell alone, the hot-cell knob a
-    * lake-scale run needs (Σ(block size)² drops ~16×; RunSemanticScale
-    * measures it at 1M vectors). Sub-bucketing only REMOVES candidate
+    * lake-scale run needs (Σ(block size)² drops ~16×; `graft.Run
+    * semantic` measures it at 1M vectors). Sub-bucketing only REMOVES candidate
     * pairs, so its labeling REFINES the unbucketed one — every bucketed
     * cluster is contained in exactly one unbucketed cluster, and exact
     * copies (identical vectors → identical sign patterns, deterministically
@@ -605,7 +590,7 @@ object VectorOps {
     * over these hyperplanes) instead of the cell alone — Σ(block size)²
     * drops by ~2^bits while near-identical vectors (the ≥ threshold
     * pairs a DEDUP cares about) still share every sign bit w.h.p.
-    * RunSemanticScale measures the effect at 1M vectors. */
+    * `graft.Run semantic` measures the effect at 1M vectors. */
   private[graft] def semanticDedupLabels(emb0: DataFrame, nClusters: Int,
       threshold: Double, subPlanes: Seq[Array[Double]] = Nil): DataFrame =
     semanticDedupWithBlocks(emb0, nClusters, threshold, subPlanes)._1
@@ -613,7 +598,7 @@ object VectorOps {
   /** [[semanticDedupLabels]] plus the block assignment it used —
     * (vec_id, cell, blk) for every nonzero-norm vector. The assignment
     * frame is the labeler's own lineage-cut intermediate (no recompute);
-    * RunSemanticScale reads it to DECOMPOSE recall losses into
+    * `graft.Run semantic` reads it to DECOMPOSE recall losses into
     * cross-cell vs same-cell/cross-sub-bucket vs in-block misses. */
   private[graft] def semanticDedupWithBlocks(emb0: DataFrame, nClusters: Int,
       threshold: Double, subPlanes: Seq[Array[Double]] = Nil): (DataFrame, DataFrame) = {

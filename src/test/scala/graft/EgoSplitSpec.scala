@@ -15,55 +15,23 @@ class EgoSplitSpec extends AnyFunSuite {
     GraphOps.symEdges(rows.toDF("src", "dst"))
   }
 
-  // seed 0's ego = {1,2,3,4}; internal edges (1,2) and (3,4) only, so the
-  // ego splits into two triangle-support components {1,2} and {3,4}
+  // seed 0's ego = {1,2,3,4}; internal edges (1,2) and (3,4) only: two
+  // triangle-support blocks {1,2} and {3,4}
   private val twoBlockEdges = sym(Seq(
     0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L,
     1L -> 2L, 3L -> 4L))
 
-  test("egoSplitPersonas separates triangle-disjoint ego blocks") {
-    import spark.implicits._
-    val seeds = Seq(0L).toDF("seed")
-    val got = GraphOps.egoSplitPersonas(twoBlockEdges, seeds)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(got == Map((0L, 1L) -> 1L, (0L, 2L) -> 1L,
-      (0L, 3L) -> 3L, (0L, 4L) -> 3L), s"got $got")
-  }
-
-  test("egoSplitPersonas labels a chain component via pointer jumping") {
-    import spark.implicits._
-    // seed 100 adjacent to a 6-node path 1-2-3-4-5-6: one component, and
-    // min-label must traverse the whole chain (exercises the jump rounds)
-    val chain = sym(Seq(100L -> 1L, 100L -> 2L, 100L -> 3L, 100L -> 4L,
-      100L -> 5L, 100L -> 6L,
-      1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 6L))
-    val got = GraphOps.egoSplitPersonas(chain, Seq(100L).toDF("seed"))
-      .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-    assert(got == (1L to 6L).map(_ -> 1L).toMap, s"got $got")
-  }
-
-  test("egoSplitPersonas leaves triangle-free members as singletons") {
-    import spark.implicits._
-    val star = sym(Seq(50L -> 51L, 50L -> 52L, 50L -> 53L))
-    val got = GraphOps.egoSplitPersonas(star, Seq(50L).toDF("seed"))
-      .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-    assert(got == Map(51L -> 51L, 52L -> 52L, 53L -> 53L), s"got $got")
-  }
-
   test("egoSplitPersonasLPA splits communities a bridge node merges") {
     import spark.implicits._
     // seed 0's ego: clique A={1,2,3}, clique B={5,6,7}, bridge node 4 with
-    // one support edge into each side (4-1, 4-5). CC returns ONE component
-    // (the dense-cover under-split failure); LPA keeps two labels — the
+    // one support edge into each side (4-1, 4-5). Connected components
+    // would merge everything through the bridge; LPA keeps two labels — the
     // bridge falls to one side, the cliques keep their own plurality.
     val edges = sym(Seq(
       0L -> 1L, 0L -> 2L, 0L -> 3L, 0L -> 4L, 0L -> 5L, 0L -> 6L, 0L -> 7L,
       1L -> 2L, 1L -> 3L, 2L -> 3L,
       5L -> 6L, 5L -> 7L, 6L -> 7L,
       4L -> 1L, 4L -> 5L))
-    val cc = GraphOps.egoSplitPersonas(edges, Seq(0L).toDF("seed"))
-      .select("comp").distinct().count()
-    assert(cc == 1L, "CC must merge through the bridge (the failure mode)")
     val lpa = GraphOps.egoSplitPersonasLPA(edges, Seq(0L).toDF("seed"))
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
     val groups = lpa.groupBy(_._2).values.map(_.keys.toSet).toSet
@@ -287,7 +255,7 @@ class EgoSplitSpec extends AnyFunSuite {
     // two 4-cliques sharing node 0 (the egosplit end-to-end fixture). The
     // REGIME validation (auto matches the best manual init on the dense
     // 10k/100 and sparse 4k/40 planted fixtures) lives in the recorded
-    // RunSelectKPlanted auto arms — a micro graph can't pin which regime
+    // `graft.Run bigclam init=auto` runs — a micro graph can't pin which regime
     // it "should" be in, so here we pin the MECHANISM: the probe fires,
     // both race LLHs and the split diag are recorded, the decision is the
     // argmax of the race, and the fit runs end-to-end either way.

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.graph.{GraphGen, GraphOps}
 
-/** The synthetic power-law generator behind the v3-scale run (RunSynth):
+/** The synthetic power-law generator behind the v3-scale `graft.Run bigclam` runs:
   * deterministic in its parameters, self-loop-free, in-range, and actually
   * skewed (the whole point — a uniform graph would not exercise hub
   * handling in seeding or AQE skew joins).

@@ -221,7 +221,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   test("processBatch(audit=true) carries the ceiling flag pre-append") {
     // the production path (round-16 ordering fix): the audit rides on
     // BatchResult.ceiling as materialized longs, computed against the
-    // PRE-append state inside processBatch — so the RunIncrementalDedup
+    // PRE-append state inside processBatch — so the `graft.Run dedup`
     // flow (process -> append -> print) can never feed the audit the
     // batch's own just-appended hashes. Same 65% family as above, but the
     // flag must arrive through processBatch and SURVIVE an appendState

@@ -1,11 +1,12 @@
 #!/bin/bash
 # Run a graft main class from compiled classes against the local Spark jars,
-# skipping sbt's JVM startup: tools/run_main.sh graft.RunSynth 1000000 ...
+# skipping sbt's JVM startup: tools/run_main.sh graft.Run bigclam source=...
 # Heap: local-mode Spark takes its driver heap from this JVM's -Xmx
-# (spark.driver.memory set after launch is a no-op), default 96g here.
+# (spark.driver.memory set after launch is a no-op): half of MemTotal by
+# default, GRAFT_XMX overrides it.
 # periodicGC 5min (vs Spark's 30min default): shuffle files are reclaimed
 # by ContextCleaner only when the JVM garbage-collects the dereferenced
-# ShuffleDependency objects — a 96g heap under an hours-long iterative
+# ShuffleDependency objects — a large heap under an hours-long iterative
 # fit may never GC, so spill accumulates ~1 GB/iteration until the disk
 # fills (killed the first round-16 capstone walk at 69 iterations).
 set -euo pipefail
@@ -25,7 +26,8 @@ if [ ! -f "$ROOT/target/scala-2.13/classes/graft/ops/Relational.class" ]; then
     "compiled library. Run 'sbt -batch compile' first." >&2
   exit 3
 fi
-exec java -Xmx"${GRAFT_XMX:-96g}" -XX:+UseG1GC \
+XMX="${GRAFT_XMX:-$(awk '/^MemTotal:/ {print int($2 / 2048) "m"}' /proc/meminfo)}"
+exec java -Xmx"$XMX" -XX:+UseG1GC \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
