@@ -15,8 +15,7 @@ import graft.ops.{IncrementalDedup, TextOps, VectorOps}
   *
   * Scenarios (README "Scenarios" records a measured run of each):
   *  - `bigclam`: fit BigCLAM ([[BigClam.fitSparse]]) on an edge source.
-  *  - `selectk`: the v4 K-grid walk ([[BigClam.selectKSparse]]), or the
-  *    held-out walk when `heldFrac` > 0.
+  *  - `selectk`: the v4 K-grid walk ([[BigClam.selectKSparse]]).
   *  - `graph`: CC, PageRank, assortativity, LPA, PPR and the modularity
   *    bracket of the CC / LPA / mod-10 partitions.
   *  - `dedup`: persisted-state incremental dedup over arrival batches.
@@ -42,7 +41,7 @@ object Run {
       "llhTol", "init", "hotDegCap", "out"), bigclam),
     "selectk" -> Scenario(Seq("source", "minK", "maxK", "steps", "iters",
       "cap", "stableTol", "llhTol", "hotDegCap", "init", "criterion",
-      "raceMemory", "kTol", "escalateCap", "stateDir", "heldFrac"), selectk),
+      "kTol", "escalateCap", "stateDir"), selectk),
     "graph" -> Scenario(Seq("source", "prIters", "lpaRounds"), graph),
     "dedup" -> Scenario(Seq("sfDir", "stateDir", "batches", "batch", "audit"), dedup),
     "semantic" -> Scenario(Seq("nVec", "k", "subBits", "threshold"), semantic),
@@ -61,7 +60,6 @@ object Run {
           throw new IllegalArgumentException(
             s"$scenario: bad value for $key: '$v' (expected $what)") }
       }
-    def has(key: String): Boolean = kv.contains(key)
     def str(key: String): Option[String] = kv.get(key)
     def str(key: String, default: String): String = kv.getOrElse(key, default)
     def int(key: String): Option[Int] = parsed(key, "an integer")(_.toInt)
@@ -171,11 +169,11 @@ object Run {
     c.unpersist()
   }
 
-  private def initLine(tag: String)(d: BigClam.InitDiag): Unit =
-    println(s"[$tag]   init: requested=${d.requested} chosen=${d.chosen} " +
+  private def initText(d: BigClam.InitDiag): String =
+    s"init: requested=${d.requested} chosen=${d.chosen} " +
       s"egoLlh=${d.egoLlh.getOrElse(Double.NaN)} " +
       s"splitLlh=${d.splitLlh.getOrElse(Double.NaN)} " +
-      s"abandonedAt=${d.abandonedAtIter.getOrElse(-1)}" + d.cover.fold("")(c => s" $c"))
+      s"abandonedAt=${d.abandonedAtIter.getOrElse(-1)}" + d.cover.fold("")(c => s" $c")
 
   private def bigclam(spark: SparkSession, a: Args): Unit = {
     val spec = a.need("source")
@@ -197,7 +195,8 @@ object Run {
     val p = BigClam.Params(k = k)
     val (fs0, history) = BigClam.fitSparse(edges, p, iterations = iters,
       ranked = Some(ranked), supportCap = cap, stableTol = stableTol,
-      llhTol = llhTol, initMode = initMode, initProbe = initLine("bigclam"))
+      llhTol = llhTol, initMode = initMode,
+      initProbe = d => println(s"[bigclam]   ${initText(d)}"))
     val fs = fs0.persist(StorageLevel.MEMORY_AND_DISK)
     val supp = fs.agg(count(lit(1)), avg(size(col("fi"))), max(size(col("fi"))),
       sum(when(size(col("fi")) > 0, 1L).otherwise(0L))).collect()(0)
@@ -226,63 +225,40 @@ object Run {
     val cap = a.posInt("cap")
     val stableTol = a.posDouble("stableTol")
     val hotCap = a.posLong("hotDegCap", 200L)
-    // an explicit 0 disables the LLH stop; the held-out walk defaults to
-    // the reference's 1e-4 only when llhTol is not given at all
     val llhTol = a.posDouble("llhTol")
     val initMode = a.str("init", "ego")
     val criterion = a.str("criterion", "llh")
-    val raceMemory = a.bool("raceMemory", false)
     val kTol = a.double("kTol", 1e-3)
     val escalateCap = a.int("escalateCap", 0)
     val stateDir = a.str("stateDir")
-    val heldFrac = a.double("heldFrac", 0.0)
     val t = new Timer
     val src = source(spark, spec)
     val edges = src.edges
     println(f"[selectk] $spec: ${edges.count()} directed edge rows (${t.secs}%.0f s)")
-    val base = BigClam.Params(k = minK)
-    val (bestK, bestF) = if (heldFrac > 0) {
-      val (hk, hf, curve) = BigClam.selectKSparseHeldOut(edges, base, minK = minK,
-        maxK = maxK, steps = steps, heldFrac = heldFrac, fitIterations = iters,
-        llhTol = if (a.has("llhTol")) llhTol else Some(1e-4), supportCap = cap,
-        hotDegCap = hotCap, initMode = initMode, initProbe = initLine("selectk"))
-      println(f"[selectk] HELD-OUT walk (frac=$heldFrac, init=$initMode) in ${t.secs}%.1f s:")
-      curve.foreach { case (k, tr, ho) =>
-        println(f"[selectk]   K=$k%-6d train_llh=$tr%.4e held_llh=$ho%.4e") }
-      println(s"[selectk] held-out choice K=$hk")
-      (hk, hf)
-    } else {
-      var diag = Option.empty[BigClam.SelectKDiag]
-      val (bk, bf, grid) = BigClam.selectKSparse(edges, base, minK = minK,
-        maxK = maxK, steps = steps, kTol = kTol, fitIterations = iters,
-        supportCap = cap, stableTol = stableTol, hotDegCap = hotCap,
-        llhTol = llhTol, initMode = initMode, initProbe = initLine("selectk"),
-        criterion = criterion,
-        criterionProbe = (k, llh, q) => println(f"[selectk]   K=$k%-6d llh=$llh%.4e" +
-          (if (q.isNaN) "" else f" q=$q%.4f")),
-        raceMemory = raceMemory, escalateCap = escalateCap, stateDir = stateDir,
-        diagProbe = d => diag = Some(d))
-      println(f"[selectk] grid ${grid.map(_._1).mkString("{", ",", "}")} " +
-        f"($iters iters each) in ${t.secs}%.1f s:")
-      grid.foreach { case (k, llh) => println(f"[selectk]   K=$k%-6d llh=$llh%.2f") }
-      // the reference's stop rule (bigclam4-7.scala:259) replayed on the
-      // curve: the first SIGNED sub-1e-3 relative gain picks the stop-point K
-      val stopIdx = grid.indices.drop(1).find(i => 1.0 - grid(i)._2 / grid(i - 1)._2 < 1e-3)
-      println(s"[selectk] reference-rule(1e-3) K=" +
-        stopIdx.fold(s"${grid.last._1} (never stopped — grid boundary)")(i => s"${grid(i)._1}"))
-      println(s"[selectk] chosen K=$bk")
-      diag.foreach { d =>
-        println(s"[selectk] decision: decided-by=${d.decidedBy} " +
-          s"boundary_pick=${d.boundaryPick} kTolFired=${d.kTolFired} " +
-          s"fireCollapse=${d.fireCollapse} " +
-          s"escalations=${d.escalations}/${d.escalateCap} " +
-          s"evaluated=${d.evaluated.mkString("{", ",", "}")}" +
-          (if (d.replayed.isEmpty) "" else s" replayed=${d.replayed.mkString("{", ",", "}")}"))
-      }
-      (bk, bf)
+    val r = BigClam.selectKSparse(edges, BigClam.Params(k = minK), minK = minK,
+      maxK = maxK, steps = steps, kTol = kTol, fitIterations = iters,
+      supportCap = cap, stableTol = stableTol, hotDegCap = hotCap,
+      llhTol = llhTol, initMode = initMode, criterion = criterion,
+      escalateCap = escalateCap, stateDir = stateDir)
+    println(f"[selectk] grid ${r.points.map(_.k).mkString("{", ",", "}")} " +
+      f"($iters iters each) in ${t.secs}%.1f s:")
+    r.points.foreach { p =>
+      println(f"[selectk]   K=${p.k}%-6d llh=${p.llh}%.2f" +
+        (if (p.q.isNaN) "" else f" q=${p.q}%.4f") + s" ${initText(p.init)}" +
+        (if (p.replayed) " (replayed)" else ""))
     }
-    src.truth.foreach(score("selectk", s"chosen K=$bestK fit",
-      BigClam.communitiesSparse(bestF, edges, BigClam.Params(k = bestK)), _))
+    // the reference's stop rule (bigclam4-7.scala:259) replayed on the
+    // curve: the first SIGNED sub-1e-3 relative gain picks the stop-point K
+    val ps = r.points
+    val stopIdx = ps.indices.drop(1).find(i => 1.0 - ps(i).llh / ps(i - 1).llh < 1e-3)
+    println(s"[selectk] reference-rule(1e-3) K=" +
+      stopIdx.fold(s"${ps.last.k} (never stopped — grid boundary)")(i => s"${ps(i).k}"))
+    println(s"[selectk] chosen K=${r.k}")
+    println(s"[selectk] decision: decided-by=${r.decidedBy} " +
+      s"boundary_pick=${r.boundaryPick} kTolFired=${r.kTolFired} " +
+      s"fireCollapse=${r.fireCollapse} escalations=${r.escalations}/$escalateCap")
+    src.truth.foreach(score("selectk", s"chosen K=${r.k} fit",
+      BigClam.communitiesSparse(r.f, edges, BigClam.Params(k = r.k)), _))
     println(f"[selectk] TOTAL ${t.secs}%.1f s")
   }
 

@@ -171,9 +171,10 @@ object BigClam {
       .withColumn("fv", transform(col("fi"), _ => lit(1.0)))
   }
 
-  /** What the init dispatch actually did — returned to `initProbe` callers
-    * and stderr-logged on every fit (the round-13 "nothing records which
-    * path a fit took" fix): `requested` is the caller's initMode, `chosen`
+  /** What the init dispatch actually did — returned to `initProbe` callers,
+    * kept per grid point by [[selectKSparse]], and stderr-logged on every
+    * fit (the round-13 "nothing records which path a fit took" fix):
+    * `requested` is the caller's initMode, `chosen`
     * the mode that ran ("ego" or "egosplit" — differs from requested only
     * under "auto"), `cover` the allocator/split diagnostics when an
     * egosplit cover was computed (also present when auto raced the split
@@ -188,27 +189,34 @@ object BigClam {
       egoLlh: Option[Double] = None, splitLlh: Option[Double] = None,
       abandonedAtIter: Option[Int] = None)
 
-  /** Decision provenance for one [[selectKSparse]] walk (round-17: the
-    * capstone's weakly-supported boundary pick, and the round-16 ADVICE
-    * that tests had to INFER the stop from probe counts — a kTol fire on
-    * the last grid point was invisible). Carries what the walk actually
-    * observed:
+  /** One evaluated grid point of a [[selectKSparse]] walk: `llh` is the
+    * point's final training LLH, `q` the Newman modularity of its fitted
+    * argmax partition (NaN under `criterion="llh"`, which skips that
+    * pass), `init` what the init dispatch did for it, and `replayed`
+    * whether it was restored from `stateDir` instead of fitted in this
+    * process (a replayed `init` carries `cover = None`). This is also the
+    * record [[SelectKStateStore]] persists per completed point. */
+  case class SelectKPoint(k: Int, llh: Double, q: Double, init: InitDiag,
+      replayed: Boolean)
+
+  /** What one [[selectKSparse]] walk chose and why: the chosen K and its
+    * fitted F, every evaluated grid point in walk order (ascending,
+    * escalations included), and the decision provenance:
+    *  - `decidedBy`: the criterion that picked K, "llh" or "modularity".
     *  - `kTolFired` / `fireCollapse`: whether the reference's relative-gain
     *    stop fired, and whether it fired on a gain COLLAPSE (elbow) rather
-    *    than a saturating decay — the auto dispatch's shape evidence,
-    *    now directly visible instead of reconstructed.
+    *    than a saturating decay — the auto dispatch's shape evidence.
     *  - `boundaryPick`: the deciding criterion's argmax is the LAST
     *    evaluated grid point — an evidence-free choice (the curve may
     *    still be rising past the grid). True only when escalation was
     *    exhausted (or disabled) with the argmax still on the edge.
     *  - `escalations`: extra log-step grid points walked past `maxK`
     *    chasing a boundary argmax (≤ `escalateCap`).
-    *  - `evaluated`: every grid point walked, ascending, escalations
-    *    included; `replayed`: the subset restored from `stateDir` instead
-    *    of fitted in this process. */
-  case class SelectKDiag(decidedBy: String, chosenK: Int, kTolFired: Boolean,
-      fireCollapse: Boolean, boundaryPick: Boolean, escalations: Int,
-      escalateCap: Int, evaluated: Seq[Int], replayed: Seq[Int])
+    *  - `peakRetained`: the most fitted F frames the walk held alive at
+    *    once (the current one plus one best-so-far per active criterion). */
+  case class SelectKResult(k: Int, f: DataFrame, points: Seq[SelectKPoint],
+      decidedBy: String, kTolFired: Boolean, fireCollapse: Boolean,
+      boundaryPick: Boolean, escalations: Int, peakRetained: Int)
 
   /** `initMode="auto"` probe cap: each candidate init runs a full
     * candidate fit — same convergence rule (llhTol, default 1e-4) and
@@ -295,10 +303,10 @@ object BigClam {
     }
   }
 
-  /** Race-memory policy for ascending-K grid walks (round 15, opt-in via
-    * `selectKSparse(raceMemory = true)`): once the per-K `auto` race has
-    * returned [[Window]] CONSECUTIVE decisive verdicts for the SAME init —
-    * decisive = the loser's LLH magnitude exceeds the winner's by
+  /** Race-memory policy for ascending-K grid walks (round 15; always on in
+    * an `initMode="auto"` [[selectKSparse]] walk): once the per-K `auto`
+    * race has returned [[Window]] CONSECUTIVE decisive verdicts for the
+    * SAME init — decisive = the loser's LLH magnitude exceeds the winner's by
     * [[DecisiveRatio]]× — subsequent grid points skip the race and fit the
     * remembered winner directly. Rationale, measured on the 10k/K*=100
     * grid: the only regime flip ever observed is at the LOW-K grid floor
@@ -899,7 +907,8 @@ object BigClam {
     * below kTol (1e-3 at bigclam4-7.scala:259), and keep only per-K LLH
     * scalars plus the best-so-far F — never the full per-K DataFrame list.
     * `stableTol` additionally bounds each grid point's iterations by
-    * membership stability, making `fitIterations` a cap.
+    * membership stability, making `fitIterations` a cap. The grid needs
+    * 1 ≤ `minK` ≤ `maxK` and `steps` ≥ 0.
     *
     * `criterion` (round-15 item 3 — the modwalk instrument promoted into
     * the selection API) picks what "best K" means:
@@ -924,15 +933,11 @@ object BigClam {
     *    decaying gains eventually cross kTol, the round-15 ADVICE case)
     *    and the modularity argmax wins. A fire with no prior gain (second
     *    grid point) carries no shape evidence and goes to modularity.
-    *    `decisionProbe` receives "llh" or "modularity".
-    * `criterionProbe` fires per evaluated K with (k, llh, q) — q is NaN
-    * under `criterion="llh"`, which skips the per-K modularity pass.
-    * `raceMemory` (opt-in, initMode="auto" only) arms [[RaceMemory]]: after
-    * two consecutive decisive (≥1.5×) same-side race verdicts, later grid
+    * An `initMode="auto"` walk keeps a [[RaceMemory]]: after two
+    * consecutive decisive (≥1.5×) same-side race verdicts, later grid
     * points fit the remembered winner directly instead of re-racing.
     * Retention: one current F plus one best-so-far per active criterion
-    * (≤ 3 alive under "auto"; `retainedProbe` reports the live count).
-    * The returned curve stays (k, final LLH) in every mode.
+    * (≤ 3 alive under "auto").
     *
     * `escalateCap` (round-17 item 1 — the boundary-riding hole the
     * capstone exposed): when the DECIDING criterion's argmax is the last
@@ -947,35 +952,31 @@ object BigClam {
     * fire (the stop IS the no-gain evidence); the modularity side has no
     * stop, so only the cap bounds it. The default 0 keeps every recorded
     * walk bit-identical; whenever the cap (or 0) leaves the deciding
-    * argmax on the edge, the decision diag carries `boundaryPick = true`.
+    * argmax on the edge, the result carries `boundaryPick = true`.
     *
     * `stateDir` (round-17 item 3) makes the walk crash-resumable: each
-    * completed grid point persists (LLH, q, init provenance, fitted F) via
+    * completed grid point persists its [[SelectKPoint]] and fitted F via
     * [[SelectKStateStore]]; a relaunch with the same parameters replays
-    * completed points — probes fire from the stored records, RaceMemory
-    * re-observes the stored race verdicts, no refit — and resumes at the
-    * first missing point. `diagProbe` receives the [[SelectKDiag]]
-    * decision provenance once, after any escalation settles. */
+    * completed points — the race memory re-observes the stored verdicts,
+    * no refit — and resumes at the first missing point.
+    *
+    * Returns a [[SelectKResult]]: the chosen K and its F, one
+    * [[SelectKPoint]] per evaluated K, and the decision provenance. */
   def selectKSparse(edges: DataFrame, base: Params, minK: Int, maxK: Int,
       steps: Int, kTol: Double = 1e-3, fitIterations: Int = 3,
       supportCap: Option[Int] = None, stableTol: Option[Double] = None,
       hotDegCap: Option[Long] = None,
-      retainedProbe: Int => Unit = _ => (),
       llhTol: Option[Double] = None,
       initMode: String = "ego",
-      initProbe: InitDiag => Unit = _ => (),
       criterion: String = "llh",
-      criterionProbe: (Int, Double, Double) => Unit = (_, _, _) => (),
-      decisionProbe: String => Unit = _ => (),
-      raceMemory: Boolean = false,
       escalateCap: Int = 0,
-      stateDir: Option[String] = None,
-      diagProbe: SelectKDiag => Unit = _ => ()): (Int, DataFrame, Seq[(Int, Double)]) = {
+      stateDir: Option[String] = None): SelectKResult = {
+    require(1 <= minK && minK <= maxK && steps >= 0,
+      s"selectKSparse needs 1 <= minK <= maxK and steps >= 0, " +
+        s"got minK=$minK maxK=$maxK steps=$steps")
     requireEdges(edges)
     require(Set("llh", "modularity", "auto")(criterion),
       s"criterion must be llh, modularity or auto, got $criterion")
-    require(!raceMemory || initMode == "auto",
-      "raceMemory only applies to initMode=auto")
     require(escalateCap >= 0, s"escalateCap must be >= 0, got $escalateCap")
     val grid = logSpacedK(minK, maxK, steps)
     // the escalation stride is the declared grid's own log step; a
@@ -993,14 +994,13 @@ object BigClam {
         "supportCap" -> supportCap.mkString(","),
         "stableTol" -> stableTol.mkString(","),
         "llhTol" -> llhTol.mkString(","),
-        "initMode" -> initMode, "criterion" -> criterion,
-        "raceMemory" -> raceMemory.toString))
+        "initMode" -> initMode, "criterion" -> criterion))
       st
     }
     val ranked = GraphOps.seedRank(edges, hotDegCap).persist(StorageLevel.MEMORY_AND_DISK)
     val needQ = criterion != "llh"
     val kTolArmed = criterion != "modularity"
-    var evals = List.empty[(Int, Double)]
+    val points = scala.collection.mutable.ArrayBuffer.empty[SelectKPoint]
     var bestL: Option[(Int, Double, DataFrame)] = None
     var bestQ: Option[(Int, Double, DataFrame)] = None
     var prevLlh = Option.empty[Double]
@@ -1008,16 +1008,17 @@ object BigClam {
     var kTolFired = false
     var lastGain = Option.empty[Double]
     var fireCollapse = false
-    var replayed = List.empty[Int]
+    var peakRetained = 0
+    // non-race diags (every point of an ego/egosplit walk) never arm it
     val mem = new RaceMemory()
     // shared per-point bookkeeping — identical for a live fit and a
     // state-store replay, so a resumed walk reconstructs the stop flags,
     // the bests, and the race memory deterministically from the records
-    def bookkeep(k: Int, llh: Double, q: Double, fs: DataFrame): Unit = {
-      criterionProbe(k, llh, q)
+    def bookkeep(pt: SelectKPoint, fs: DataFrame): Unit = {
+      mem.observe(pt.init)
       if (kTolArmed) {
         prevLlh.foreach { pl =>
-          val g = math.abs(1.0 - llh / pl)
+          val g = math.abs(1.0 - pt.llh / pl)
           if (g < kTol && !kTolFired) {
             stop = true; kTolFired = true
             // elbow vs saturation shape evidence for the auto dispatch: a
@@ -1031,29 +1032,24 @@ object BigClam {
           }
           lastGain = Some(g)
         }
-        prevLlh = Some(llh)
+        prevLlh = Some(pt.llh)
       }
-      if (bestL.forall(_._2 < llh)) bestL = Some((k, llh, fs))
-      if (needQ && bestQ.forall(_._2 < q)) bestQ = Some((k, q, fs))
-      retainedProbe(1 + Set(bestL.map(_._3), bestQ.map(_._3)).flatten.size)
-      evals = (k, llh) :: evals
+      if (bestL.forall(_._2 < pt.llh)) bestL = Some((pt.k, pt.llh, fs))
+      if (needQ && bestQ.forall(_._2 < pt.q)) bestQ = Some((pt.k, pt.q, fs))
+      peakRetained = math.max(peakRetained,
+        1 + Set(bestL.map(_._3), bestQ.map(_._3)).flatten.size)
+      points += pt
     }
     def evalLive(k: Int): Unit = {
-      // race memory (opt-in): after two consecutive decisive same-side
-      // verdicts in this ascending walk, fit the remembered winner
-      // directly — the skipped race's ~30-45 loser-leg iterations were
-      // pure confirmation of a verdict already measured twice
-      val im = if (raceMemory) mem.sticky.getOrElse(initMode) else initMode
-      var lastDiag = Option.empty[InitDiag]
-      val probe: InitDiag => Unit = { d =>
-        lastDiag = Some(d)
-        if (raceMemory) mem.observe(d)
-        initProbe(d)
-      }
+      // race memory: after two consecutive decisive same-side verdicts in
+      // this ascending walk, fit the remembered winner directly — the
+      // skipped race's ~30-45 loser-leg iterations were pure confirmation
+      // of a verdict already measured twice
+      var diag = Option.empty[InitDiag]
       val (fs, hist) = fitSparse(edges, base.copy(k = k), fitIterations,
         ranked = Some(ranked), supportCap = supportCap, stableTol = stableTol,
-        llhTol = llhTol, initMode = im, initProbe = probe)
-      val llh = hist.last
+        llhTol = llhTol, initMode = mem.sticky.getOrElse(initMode),
+        initProbe = d => diag = Some(d))
       val q = if (needQ) {
         // one modularity pass over the fitted argmax partition: two label
         // joins + a per-part rollup — cheap next to the fit it scores, and
@@ -1062,28 +1058,19 @@ object BigClam {
           SparseF.argmaxIndex(col("fi"), col("fv")).as("lab"))
         GraphOps.modularity(edges, labels, s"k$k").collect()(0).getDouble(3)
       } else Double.NaN
-      store.foreach(_.put(SelectKStateStore.Point(k, llh, q,
-        lastDiag.map(_.requested).getOrElse(im),
-        lastDiag.map(_.chosen).getOrElse(im),
-        lastDiag.flatMap(_.egoLlh), lastDiag.flatMap(_.splitLlh),
-        lastDiag.flatMap(_.abandonedAtIter)), fs))
-      bookkeep(k, llh, q, fs)
+      val pt = SelectKPoint(k, hist.last, q, diag.get, replayed = false)
+      store.foreach(_.put(pt, fs))
+      bookkeep(pt, fs)
     }
-    // replay a prior process's completed point, or fit it live: the probes
-    // fire either way (the resumed walk's provenance trail stays whole),
-    // the race memory re-observes stored verdicts, F reads lazily from the
-    // store's parquet — no refit
+    // replay a prior process's completed point, or fit it live: a replayed
+    // record feeds the same bookkeeping (stop flags, bests, race memory),
+    // F reads lazily from the store's parquet — no refit
     def runPoint(k: Int): Unit = store.flatMap(_.get(k)) match {
-      case Some(p) =>
-        replayed ::= k
-        val d = InitDiag(p.requested, p.chosen, None, p.egoLlh, p.splitLlh,
-          p.abandonedAt)
-        if (raceMemory) mem.observe(d)
-        initProbe(d)
-        bookkeep(k, p.llh, p.q, store.get.readF(k))
+      case Some(pt) => bookkeep(pt, store.get.readF(k))
       case None => evalLive(k)
     }
     for (k <- grid if !stop) runPoint(k)
+    def lastK: Int = points.last.k
     def decide(): String = criterion match {
       case "llh" => "llh"
       case "modularity" => "modularity"
@@ -1097,9 +1084,7 @@ object BigClam {
         // ADVICE: kTolFired alone also fires there, and routing it to LLH
         // would pick the stop boundary instead of the modularity peak) —
         // where modularity is the capacity-penalized instrument.
-        val lastEvaluatedK = evals.head._1
-        if (bestL.exists(_._1 != lastEvaluatedK) || (kTolFired && fireCollapse))
-          "llh"
+        if (bestL.exists(_._1 != lastK) || (kTolFired && fireCollapse)) "llh"
         else "modularity"
     }
     var decidedBy = decide()
@@ -1113,146 +1098,21 @@ object BigClam {
     // reference's no-gain evidence (bigclam4-7.scala:259); the modularity
     // side has no stop, so the cap is its only bound.
     var esc = 0
-    while (esc < escalateCap && decidingK == evals.head._1 &&
+    while (esc < escalateCap && decidingK == lastK &&
         !(decidedBy == "llh" && kTolFired)) {
-      val nk = math.max(evals.head._1 + 1,
-        math.round(evals.head._1 * escGap).toInt)
-      runPoint(nk)
+      runPoint(math.max(lastK + 1, math.round(lastK * escGap).toInt))
       esc += 1
       decidedBy = decide()
     }
     ranked.unpersist()
-    val boundaryPick = decidingK == evals.head._1
-    decisionProbe(decidedBy)
+    val boundaryPick = decidingK == lastK
     val (bk, score, bf) = (if (decidedBy == "llh") bestL else bestQ).get
-    diagProbe(SelectKDiag(decidedBy, bk, kTolFired, fireCollapse,
-      boundaryPick, esc, escalateCap, evals.reverse.map(_._1),
-      replayed.reverse))
     System.err.println(f"[bigclam] selectKSparse criterion=$criterion " +
       f"decided-by=$decidedBy chosen K=$bk (score=$score%.6e" +
       (if (boundaryPick) ", BOUNDARY pick — curve may still be rising" else "") +
       (if (esc > 0) s", escalations=$esc" else "") + ")")
-    (bk, bf, evals.reverse)
-  }
-
-  /** Deterministic undirected train/held-out edge split for model selection.
-    * The coin is hashed on the UNDIRECTED pair (least, greatest), so both
-    * directed rows of an edge land on the same side — holding out one
-    * direction of a symmetric pair would leak the edge into training.
-    * Returns (train: symmetric directed rows, held: one (u, v) row per
-    * undirected held-out pair, u < v). Fully distributed — two narrow
-    * filters over the edge frame, no shuffle. */
-  def splitEdgesHoldOut(edges: DataFrame, heldFrac: Double,
-      seed: Long = 42L): (DataFrame, DataFrame) = {
-    require(heldFrac > 0.0 && heldFrac < 1.0, "heldFrac must be in (0,1)")
-    val u01 = shiftrightunsigned(
-      xxhash64(least(col("src"), col("dst")), greatest(col("src"), col("dst")),
-        lit(seed)), 11).cast("double") * lit(1.0 / (1L << 53))
-    val train = edges.filter(u01 >= heldFrac)
-    val held = edges.filter(u01 < heldFrac && col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-    (train, held)
-  }
-
-  /** `n` deterministic NON-edge (u, v) pairs (u < v) over the graph's node
-    * id range — the negative half of a held-out likelihood (scoring edges
-    * alone rewards capacity monotonically; non-edges are what extra
-    * communities over-explain). Draws hash-uniform pairs over [0, maxId],
-    * keeps those whose endpoints both exist, anti-joins the full edge set;
-    * on a sparse graph almost every draw survives, so `oversample` bounds
-    * the retry-free shortfall. All joins are key-partitioned; nothing is
-    * collected. */
-  def sampleNonEdgePairs(edges: DataFrame, n: Long, seed: Long = 42L,
-      oversample: Double = 1.3): DataFrame = {
-    require(n <= Int.MaxValue, s"n=$n exceeds limit()'s Int range")
-    val spark = edges.sparkSession
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxId = nodes.agg(max(col("node"))).collect()(0).getLong(0)
-    def h(salt: Int) = pmod(xxhash64(col("id"), lit(seed), lit(salt)), lit(maxId + 1))
-    val draws = spark.range(math.max((n * oversample).toLong, n + 16))
-      .select(least(h(41), h(42)).as("u"), greatest(h(41), h(42)).as("v"))
-      .filter(col("u") < col("v")).distinct()
-    val out = draws
-      .join(nodes.select(col("node").as("u")), Seq("u"), "left_semi")
-      .join(nodes.select(col("node").as("v")), Seq("v"), "left_semi")
-      .join(edges.select(col("src").as("u"), col("dst").as("v")),
-        Seq("u", "v"), "left_anti")
-      .orderBy("u", "v").limit(n.toInt)
-      .select(col("u"), col("v"))
-      // the two semi-joins are the only readers of `nodes`; materialize
-      // them now so the cached frame can be dropped instead of leaking one
-      // pinned persist per call (callers invoke this once per grid walk)
-      .localCheckpoint(true)
-    nodes.unpersist()
-    out
-  }
-
-  /** Held-out Bernoulli log-likelihood of a fitted sparse F on a labeled
-    * pair set: Σ_{held edges} log(1 − clip(exp(−Fu·Fv))) +
-    * Σ_{sampled non-edges} log(clip(exp(−Fu·Fv))) — the AGM link function
-    * scored on pairs the fit never saw, with the fit's own p-clips so a
-    * zero dot product stays finite. Nodes absent from F (isolated in the
-    * train split) contribute dot = 0 via the left-join coalesce to empty
-    * support. Two key-partitioned joins + one DECIMAL sum; F never leaves
-    * the executors. */
-  def heldOutLlhSparse(fs: DataFrame, heldEdges: DataFrame,
-      nonEdges: DataFrame, p: Params): Double = {
-    val empty = array().cast("array<int>")
-    val emptyV = array().cast("array<double>")
-    def withF(pairs: DataFrame, isEdge: Boolean) = pairs
-      .join(fs.select(col("id").as("u"), col("fi").as("ufi"), col("fv").as("ufv")),
-        Seq("u"), "left")
-      .join(fs.select(col("id").as("v"), col("fi").as("vfi"), col("fv").as("vfv")),
-        Seq("v"), "left")
-      .select(SparseF.sparseDot(
-        coalesce(col("ufi"), empty), coalesce(col("ufv"), emptyV),
-        coalesce(col("vfi"), empty), coalesce(col("vfv"), emptyV)).as("d"))
-      .select((if (isEdge) log(lit(1.0) - clipP(exp(-col("d")), p))
-               else log(clipP(exp(-col("d")), p))).as("llh"))
-    withF(heldEdges, isEdge = true).unionAll(withF(nonEdges, isEdge = false))
-      .agg(sum(col("llh").cast("decimal(38,12)")).cast("double"))
-      .collect()(0).getDouble(0)
-  }
-
-  /** Held-out K selection — the standard answer when raw LLH rises with
-    * capacity monotonically (on hub-dominated unplanted graphs it does —
-    * README "Two findings" — so the reference's relative-gain stop never
-    * fires and argmax training LLH is not a model-selection signal). Split
-    * the edges once (undirected-pair-hashed), fit every grid K on the train
-    * split to the SAME convergence tolerance, score each fit's Bernoulli
-    * LLH on the held-out edges plus an equal-sized non-edge sample, and
-    * choose the argmax. Returns (chosen K, its F fitted on train, per-K
-    * (k, trainLlh, heldLlh) curve). Retention matches [[selectKSparse]]:
-    * one best-so-far F plus the current one. */
-  def selectKSparseHeldOut(edges: DataFrame, base: Params, minK: Int,
-      maxK: Int, steps: Int, heldFrac: Double = 0.1,
-      fitIterations: Int = 50, llhTol: Option[Double] = Some(1e-4),
-      supportCap: Option[Int] = None, hotDegCap: Option[Long] = None,
-      seed: Long = 42L,
-      initMode: String = "ego",
-      initProbe: InitDiag => Unit = _ => ()): (Int, DataFrame, Seq[(Int, Double, Double)]) = {
-    requireEdges(edges)
-    val (train, held) = splitEdgesHoldOut(edges, heldFrac, seed)
-    val trainP = train.persist(StorageLevel.MEMORY_AND_DISK)
-    val heldP = held.persist(StorageLevel.MEMORY_AND_DISK)
-    val nHeld = heldP.count()
-    val nonEdges = sampleNonEdgePairs(edges, math.max(nHeld, 1L), seed)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ranked = GraphOps.seedRank(trainP, hotDegCap).persist(StorageLevel.MEMORY_AND_DISK)
-    var evals = List.empty[(Int, Double, Double)]
-    var best: Option[(Int, Double, DataFrame)] = None
-    for (k <- logSpacedK(minK, maxK, steps)) {
-      val (fs, hist) = fitSparse(trainP, base.copy(k = k), fitIterations,
-        ranked = Some(ranked), supportCap = supportCap, llhTol = llhTol,
-        initMode = initMode, initProbe = initProbe)
-      val ho = heldOutLlhSparse(fs, heldP, nonEdges, base.copy(k = k))
-      if (best.forall(_._2 < ho)) best = Some((k, ho, fs))
-      evals = (k, hist.last, ho) :: evals
-    }
-    ranked.unpersist(); trainP.unpersist(); heldP.unpersist(); nonEdges.unpersist()
-    val (bk, _, bf) = best.get
-    (bk, bf, evals.reverse)
+    SelectKResult(bk, bf, points.toSeq, decidedBy, kTolFired, fireCollapse,
+      boundaryPick, esc, peakRetained)
   }
 
   /** Log-spaced ascending K grid, deduped (bigclam4-7.scala:16-20:
@@ -1741,23 +1601,14 @@ object BigClam {
       import s.implicits._
       val edges = GraphOps.symEdges(GraphOps.rawEdges(s, d, 150))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val (_, _, grid) = selectKSparse(edges, Params(k = 2), minK = 2, maxK = 6,
+      val walk = selectKSparse(edges, Params(k = 2), minK = 2, maxK = 6,
         steps = 3, fitIterations = 2)
       edges.unpersist() // grid LLHs are already driver-side scalars
-      grid.map { case (k, llh) => (k, math.rint(llh * 100) / 100) }
+      walk.points.map(pt => (pt.k, math.rint(pt.llh * 100) / 100))
         .toDF("k", "llh")
         .orderBy("k")
     }
 
-  /** [no-oracle] The full scientific loop as one declared query: generate a
-    * graph with KNOWN communities (planted partition, deterministic xxhash64
-    * construction — input-dir independent by design), recover it with the
-    * production sparse path (seedRank → fitSparse under the membership-
-    * stability stop rule → threshold-δ communities), and score symmetric
-    * best-match F1 against the planted truth. The reference ships SNAP
-    * ground-truth `.cmty` files but never closes this loop. One scalar row;
-    * EvalSpec pins the same fixture end-to-end at F1 > 0.9 (measured 1.0).
-    * The fit is session model state like the other smoke fits — memoized. */
   /** [no-oracle] OVERLAPPING planted-cover recovery — the AGM regime that
     * is BigCLAM's entire thesis (README.md:6; threshold-δ multi-membership
     * at Bigclamv2.scala:223-229): the disjoint `bigclam_recovery_smoke`
@@ -1802,6 +1653,15 @@ object BigClam {
       out
     }
 
+  /** [no-oracle] The full scientific loop as one declared query: generate a
+    * graph with KNOWN communities (planted partition, deterministic xxhash64
+    * construction — input-dir independent by design), recover it with the
+    * production sparse path (seedRank → fitSparse under the membership-
+    * stability stop rule → threshold-δ communities), and score symmetric
+    * best-match F1 against the planted truth. The reference ships SNAP
+    * ground-truth `.cmty` files but never closes this loop. One scalar row;
+    * EvalSpec pins the same fixture end-to-end at F1 > 0.9 (measured 1.0).
+    * The fit is session model state like the other smoke fits — memoized. */
   def bigclam_recovery_smoke(s: SparkSession, d: String): DataFrame =
     smokeCached(s, d, "recovery") {
       val edges = GraphOps.symEdges(

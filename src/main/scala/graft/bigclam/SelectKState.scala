@@ -20,10 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    walks, so a mismatch fails loudly. `escalateCap` is deliberately
   *    NOT part of the identity: re-running a completed walk with a larger
   *    cap is the supported way to EXTEND it past a boundary pick.
-  *  - `point_k<K>.properties` — one per completed grid point: final LLH,
-  *    modularity q (NaN when the criterion never scored it), and the init
-  *    provenance needed to replay [[BigClam.RaceMemory]] deterministically
-  *    (requested/chosen side, both race LLHs, abandon iteration).
+  *  - `point_k<K>.properties` — one per completed grid point: the walk's
+  *    per-K result, [[BigClam.SelectKPoint]] — final LLH, modularity q
+  *    (NaN when the criterion never scored it), and the init provenance
+  *    that replays [[BigClam.RaceMemory]] deterministically
+  *    (requested/chosen side, both race LLHs, abandon iteration). The
+  *    init's cover diagnostics are not stored.
   *  - `f_k<K>.parquet` — the fitted F frame for the point, so a resumed
   *    walk can RETURN a best fit that was computed in a previous process.
   *
@@ -79,18 +81,20 @@ final class SelectKStateStore(dir: String, spark: SparkSession) {
   private def pointFile(k: Int) = new File(root, s"point_k$k.properties")
   private def fPath(k: Int): String = new File(root, s"f_k$k.parquet").getPath
 
-  /** The completed-point record, if this k finished in a prior process. */
-  def get(k: Int): Option[SelectKStateStore.Point] = {
+  /** The completed-point record, if this k finished in a prior process —
+    * marked `replayed`, with `cover = None` in its init. */
+  def get(k: Int): Option[BigClam.SelectKPoint] = {
     val f = pointFile(k)
     if (!f.exists()) None
     else {
       val p = propsOf(f)
       def opt(key: String): Option[String] = Option(p.getProperty(key))
-      Some(SelectKStateStore.Point(k,
+      Some(BigClam.SelectKPoint(k,
         p.getProperty("llh").toDouble, p.getProperty("q").toDouble,
-        p.getProperty("requested"), p.getProperty("chosen"),
-        opt("egoLlh").map(_.toDouble), opt("splitLlh").map(_.toDouble),
-        opt("abandonedAt").map(_.toInt)))
+        BigClam.InitDiag(p.getProperty("requested"), p.getProperty("chosen"),
+          None, opt("egoLlh").map(_.toDouble), opt("splitLlh").map(_.toDouble),
+          opt("abandonedAt").map(_.toInt)),
+        replayed = true))
     }
   }
 
@@ -99,26 +103,16 @@ final class SelectKStateStore(dir: String, spark: SparkSession) {
 
   /** Persist one completed point: F parquet first, then the (atomic)
     * properties record whose presence marks the point complete. */
-  def put(p: SelectKStateStore.Point, f: DataFrame): Unit = {
+  def put(p: BigClam.SelectKPoint, f: DataFrame): Unit = {
     f.write.mode("overwrite").parquet(fPath(p.k))
     val props = new Properties()
     props.setProperty("llh", p.llh.toString)
     props.setProperty("q", p.q.toString)
-    props.setProperty("requested", p.requested)
-    props.setProperty("chosen", p.chosen)
-    p.egoLlh.foreach(v => props.setProperty("egoLlh", v.toString))
-    p.splitLlh.foreach(v => props.setProperty("splitLlh", v.toString))
-    p.abandonedAt.foreach(v => props.setProperty("abandonedAt", v.toString))
+    props.setProperty("requested", p.init.requested)
+    props.setProperty("chosen", p.init.chosen)
+    p.init.egoLlh.foreach(v => props.setProperty("egoLlh", v.toString))
+    p.init.splitLlh.foreach(v => props.setProperty("splitLlh", v.toString))
+    p.init.abandonedAtIter.foreach(v => props.setProperty("abandonedAt", v.toString))
     writeProps(pointFile(p.k), props, s"grid point k=${p.k}")
   }
-}
-
-object SelectKStateStore {
-  /** One completed grid point. `q` is NaN when the walk's criterion never
-    * scored modularity; the three init fields replay [[BigClam.RaceMemory]]
-    * and the walk's provenance printing (the cover diag is NOT persisted —
-    * a replayed [[BigClam.InitDiag]] carries `cover = None`). */
-  case class Point(k: Int, llh: Double, q: Double, requested: String,
-      chosen: String, egoLlh: Option[Double], splitLlh: Option[Double],
-      abandonedAt: Option[Int])
 }

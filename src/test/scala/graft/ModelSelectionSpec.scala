@@ -24,15 +24,27 @@ class ModelSelectionSpec extends AnyFunSuite {
     assert(ratios.forall(r => r > 1.0 && r < 1.35))
   }
 
+  /** One grid walk on the toy: sorted grid, a grid K, sparse F rows, and
+   *  the chosen K holding the best LLH. */
+  private def checkGridWalk(cap: Option[Int]): Unit = {
+    val r = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
+      minK = 2, maxK = 4, steps = 2, fitIterations = 2, supportCap = cap)
+    val ks = r.points.map(_.k)
+    assert(ks.nonEmpty)
+    assert(ks == ks.sorted)
+    assert(Set(2, 3, 4).contains(r.k))
+    assert(r.f.count() == 6)
+    assert(r.f.columns.toSet == Set("id", "fi", "fv")) // sparse rows
+    val bestLlh = r.points.find(_.k == r.k).get.llh
+    assert(r.points.forall(_.llh <= bestLlh + 1e-9), s"cap=$cap")
+  }
+
   test("selectK walks the grid and returns the best-LLH fit") {
-    val (k, f, history) = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
-      minK = 2, maxK = 4, steps = 2, fitIterations = 2)
-    assert(history.nonEmpty)
-    assert(history.map(_._1) == history.map(_._1).sorted)
-    assert(Set(2, 3, 4).contains(k))
-    assert(f.count() == 6)
-    val bestLlh = history.find(_._1 == k).get._2
-    assert(history.forall(_._2 <= bestLlh + 1e-9))
+    checkGridWalk(cap = None)
+  }
+
+  test("selectKSparse mirrors selectK: same grid walk over the capped sparse fit") {
+    checkGridWalk(cap = Some(2))
   }
 
   test("bigclam_select_k_smoke emits the evaluated grid as scalar rows") {
@@ -46,26 +58,13 @@ class ModelSelectionSpec extends AnyFunSuite {
   }
 
   test("selectK retains at most two factor DataFrames mid-grid") {
-    var maxRetained = 0
     // criterion="llh" (the default): one current F plus one best-so-far
-    val (_, f, history) = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
-      minK = 2, maxK = 6, steps = 3, fitIterations = 1,
-      retainedProbe = n => maxRetained = math.max(maxRetained, n))
-    assert(history.size >= 2) // probe actually fired mid-grid
-    assert(maxRetained <= 2, s"selectKSparse held $maxRetained factor DataFrames alive")
-    assert(f.count() == 6)
-  }
-
-  test("selectKSparse mirrors selectK: same grid walk over the capped sparse fit") {
-    val (k, fs, history) = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
-      minK = 2, maxK = 4, steps = 2, fitIterations = 2, supportCap = Some(2))
-    assert(history.nonEmpty)
-    assert(history.map(_._1) == history.map(_._1).sorted)
-    assert(Set(2, 3, 4).contains(k))
-    assert(fs.count() == 6)
-    assert(fs.columns.toSet == Set("id", "fi", "fv")) // sparse rows
-    val bestLlh = history.find(_._1 == k).get._2
-    assert(history.forall(_._2 <= bestLlh + 1e-9))
+    val r = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
+      minK = 2, maxK = 6, steps = 3, fitIterations = 1)
+    assert(r.points.size >= 2) // the peak covers a mid-grid point
+    assert(r.peakRetained <= 2,
+      s"selectKSparse held ${r.peakRetained} factor DataFrames alive")
+    assert(r.f.count() == 6)
   }
 
   test("fitSparse llhTol converges to the reference relative-LLH rule") {
@@ -90,74 +89,6 @@ class ModelSelectionSpec extends AnyFunSuite {
     hist.dropRight(1).zip(histTight).foreach { case (x, y) =>
       assert(x == y, s"llhTol changed the fit path: $hist vs $histTight")
     }
-  }
-
-  test("splitEdgesHoldOut keeps undirected pairs whole and partitions them") {
-    import org.apache.spark.sql.functions._
-    val (train, held) = BigClam.splitEdgesHoldOut(edges, 0.4)
-    // train stays symmetric: every (a,b) has its (b,a)
-    val asym = train.select(col("src"), col("dst"))
-      .except(train.select(col("dst").as("src"), col("src").as("dst"))).count()
-    assert(asym == 0, "train split broke edge symmetry")
-    // held is single-direction u < v
-    assert(held.filter(col("u") >= col("v")).count() == 0)
-    // partition: held + train's undirected pairs == all undirected pairs
-    val trainU = train.filter(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-    val allU = edges.filter(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-    assert(trainU.intersect(held).count() == 0, "pair on both sides")
-    assert(trainU.unionAll(held).count() == allU.count())
-    // deterministic
-    val (_, held2) = BigClam.splitEdgesHoldOut(edges, 0.4)
-    assert(held.except(held2).count() == 0 && held2.except(held).count() == 0)
-  }
-
-  test("sampleNonEdgePairs draws real non-edges over existing nodes") {
-    import org.apache.spark.sql.functions._
-    val ne = BigClam.sampleNonEdgePairs(edges, 4).cache()
-    assert(ne.count() == 4)
-    assert(ne.filter(col("u") >= col("v")).count() == 0)
-    // none is an edge (in either direction — edges are symmetric)
-    val hits = ne.join(edges.select(col("src").as("u"), col("dst").as("v")),
-      Seq("u", "v"), "left_semi").count()
-    assert(hits == 0, s"$hits sampled pairs are edges")
-    // endpoints all exist in the graph
-    val nodes = edges.select(col("src")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    ne.collect().foreach { r =>
-      assert(nodes(r.getLong(1)) && nodes(r.getLong(0))) }
-  }
-
-  test("heldOutLlhSparse is finite, negative, and rewards the better model") {
-    val (train, held) = BigClam.splitEdgesHoldOut(edges, 0.3)
-    val ne = BigClam.sampleNonEdgePairs(edges, held.count()).cache()
-    val p = BigClam.Params(k = 2)
-    val (fs, _) = BigClam.fitSparse(train, p, iterations = 6, trackHistory = false)
-    val fitted = BigClam.heldOutLlhSparse(fs, held, ne, p)
-    assert(!fitted.isNaN && !fitted.isInfinite && fitted < 0.0)
-    // an all-zero factor matrix predicts no edges at all: the held-out
-    // edges' clipped log(1 - maxP-floor) terms must score strictly worse
-    import org.apache.spark.sql.functions._
-    val zeroF = fs.select(col("id"),
-      array().cast("array<int>").as("fi"),
-      array().cast("array<double>").as("fv"))
-    val zero = BigClam.heldOutLlhSparse(zeroF, held, ne, p)
-    assert(fitted > zero, s"fit $fitted did not beat the empty model $zero")
-  }
-
-  test("selectKSparseHeldOut walks the full grid and picks a grid K") {
-    val (k, f, curve) = BigClam.selectKSparseHeldOut(edges,
-      BigClam.Params(k = 2), minK = 2, maxK = 4, steps = 2,
-      heldFrac = 0.3, fitIterations = 4, llhTol = Some(1e-3))
-    val grid = BigClam.logSpacedK(2, 4, 2)
-    assert(curve.map(_._1) == grid, "held-out walk must cover the whole grid")
-    assert(grid.contains(k))
-    curve.foreach { case (_, tr, ho) =>
-      assert(!tr.isNaN && !ho.isNaN && ho < 0.0) }
-    // the chosen K is the held-LLH argmax
-    assert(curve.maxBy(_._3)._1 == k)
-    assert(f.count() > 0)
   }
 
   test("fitSparse warmStart from its own init reproduces the cold fit exactly") {
@@ -214,37 +145,35 @@ class ModelSelectionSpec extends AnyFunSuite {
       Seq((4L, 5L))).toDF("src", "dst")).cache()
   }
 
+  /** The walk's (k, llh, q) per evaluated grid point, in walk order. */
+  private def curve(r: BigClam.SelectKResult): Vector[(Int, Double, Double)] =
+    r.points.map(p => (p.k, p.llh, p.q)).toVector
+
   test("selectKSparse criterion=modularity walks the full grid and picks the q peak") {
-    var probes = Vector.empty[(Int, Double, Double)]
-    var decided = ""
-    val (k, fs, history) = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+    val r = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
       minK = 1, maxK = 4, steps = 2, fitIterations = 30,
-      llhTol = Some(1e-4), criterion = "modularity",
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      decisionProbe = d => decided = d)
-    assert(decided == "modularity")
+      llhTol = Some(1e-4), criterion = "modularity")
+    val probes = curve(r)
+    assert(r.decidedBy == "modularity")
     assert(probes.map(_._1) == BigClam.logSpacedK(1, 4, 2),
       s"modularity must walk the FULL grid (no kTol stop): $probes")
     assert(probes.forall(p => !p._3.isNaN), s"q must be scored per K: $probes")
-    assert(k == 2, s"q peak must be the two-clique cut: $probes")
-    assert(fs.count() == 10)
-    assert(history.map(_._1) == probes.map(_._1).toList,
-      "the returned curve stays (k, llh) in every mode")
+    assert(r.k == 2, s"q peak must be the two-clique cut: $probes")
+    assert(r.f.count() == 10)
   }
 
-  /** Reconstruct the documented auto dispatch from the probe record plus
-    * the walk's own [[BigClam.SelectKDiag]] stop flags (round-16 ADVICE:
-    * the old oracle INFERRED the stop from `probes.size < gridSize`, so a
-    * kTol fire landing exactly on the last grid point was invisible — a
-    * latent false failure). The flags are cross-checked against an
-    * independent recomputation of the gain sequence from the probes, so
-    * the oracle is not circular: interior LLH argmax → llh; kTol stop
-    * fired on a gain COLLAPSE (firing gain ≤ ElbowCollapseRatio × the
-    * prior gain; a fire with no prior gain carries no shape evidence) →
-    * llh; otherwise (boundary-riding or saturating monotone) →
-    * modularity. */
-  private def expectDispatch(probes: Vector[(Int, Double, Double)],
-      diag: BigClam.SelectKDiag, kTol: Double = 1e-3): String = {
+  /** Reconstruct the documented auto dispatch from the walk's per-K curve
+    * plus its own stop flags (round-16 ADVICE: the old oracle INFERRED the
+    * stop from `probes.size < gridSize`, so a kTol fire landing exactly on
+    * the last grid point was invisible — a latent false failure). The flags
+    * are cross-checked against an independent recomputation of the gain
+    * sequence from the curve, so the oracle is not circular: interior LLH
+    * argmax → llh; kTol stop fired on a gain COLLAPSE (firing gain ≤
+    * ElbowCollapseRatio × the prior gain; a fire with no prior gain carries
+    * no shape evidence) → llh; otherwise (boundary-riding or saturating
+    * monotone) → modularity. */
+  private def expectDispatch(r: BigClam.SelectKResult, kTol: Double = 1e-3): String = {
+    val probes = curve(r)
     val lastK = probes.last._1
     val llhPick = probes.maxBy(_._2) // first max wins ties, like bestL
     // independent stop-flag recomputation from the recorded curve: the
@@ -253,34 +182,29 @@ class ModelSelectionSpec extends AnyFunSuite {
     val gains = probes.map(_._2).sliding(2).collect {
       case Seq(a, b) => math.abs(1.0 - b / a) }.toVector
     val fireIdx = gains.indexWhere(_ < kTol)
-    assert(diag.kTolFired == (fireIdx >= 0),
-      s"kTolFired=${diag.kTolFired} but recomputed gains=$gains kTol=$kTol")
+    assert(r.kTolFired == (fireIdx >= 0),
+      s"kTolFired=${r.kTolFired} but recomputed gains=$gains kTol=$kTol")
     if (fireIdx >= 0)
-      assert(diag.fireCollapse ==
+      assert(r.fireCollapse ==
           (fireIdx >= 1 && gains(fireIdx) <= 0.2 * gains(fireIdx - 1)),
-        s"fireCollapse=${diag.fireCollapse} gains=$gains fireIdx=$fireIdx")
-    if (llhPick._1 != lastK || (diag.kTolFired && diag.fireCollapse)) "llh"
+        s"fireCollapse=${r.fireCollapse} gains=$gains fireIdx=$fireIdx")
+    if (llhPick._1 != lastK || (r.kTolFired && r.fireCollapse)) "llh"
     else "modularity"
   }
 
   test("selectKSparse criterion=auto dispatches by the recorded LLH-curve evidence") {
-    var probes = Vector.empty[(Int, Double, Double)]
-    var decided = ""
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, _, _) = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
+    val r = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
       minK = 2, maxK = 6, steps = 2, fitIterations = 20, llhTol = Some(1e-4),
-      criterion = "auto",
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      decisionProbe = d => decided = d,
-      diagProbe = d => diag = Some(d))
+      criterion = "auto")
+    val probes = curve(r)
     assert(probes.forall(p => !p._3.isNaN), "auto must score q for every K")
-    val expectBy = expectDispatch(probes, diag.get)
-    assert(decided == expectBy, s"probes=$probes decided=$decided")
-    assert(diag.get.decidedBy == decided && diag.get.escalations == 0 &&
-      diag.get.evaluated == probes.map(_._1))
+    val expectBy = expectDispatch(r)
+    assert(r.decidedBy == expectBy, s"probes=$probes decided=${r.decidedBy}")
+    assert(r.escalations == 0 && probes.map(_._1) == BigClam.logSpacedK(2, 6, 2)
+      .take(probes.size))
     val expectK =
       if (expectBy == "llh") probes.maxBy(_._2)._1 else probes.maxBy(_._3)._1
-    assert(k == expectK, s"probes=$probes decided=$decided k=$k")
+    assert(r.k == expectK, s"probes=$probes decided=${r.decidedBy} k=${r.k}")
   }
 
   test("selectKSparse criterion=auto: a kTol fire with no shape evidence goes to modularity") {
@@ -290,29 +214,24 @@ class ModelSelectionSpec extends AnyFunSuite {
     // round-16 dispatch must route to modularity instead of handing the
     // stop boundary to the LLH argmax (the round-15 ADVICE blind spot:
     // kTolFired alone used to force "llh")
-    var probes = Vector.empty[(Int, Double, Double)]
-    var decided = ""
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, _, _) = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
+    val r = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
       minK = 2, maxK = 8, steps = 3, fitIterations = 20, llhTol = Some(1e-4),
-      kTol = 0.9, criterion = "auto",
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      decisionProbe = d => decided = d,
-      diagProbe = d => diag = Some(d))
+      kTol = 0.9, criterion = "auto")
+    val probes = curve(r)
     assert(probes.size == 2,
       s"kTol=0.9 must stop the walk at the second point: $probes")
-    assert(diag.get.kTolFired && !diag.get.fireCollapse,
-      s"a first-gain fire carries no shape evidence: ${diag.get}")
+    assert(r.kTolFired && !r.fireCollapse,
+      s"a first-gain fire carries no shape evidence: $r")
     // regardless of which side of the boundary the LLH argmax fell on,
     // the documented rule must hold; and when the argmax rides the stop
     // boundary the decision must be modularity (the fixed blind spot)
-    assert(decided == expectDispatch(probes, diag.get, kTol = 0.9),
-      s"probes=$probes decided=$decided")
+    assert(r.decidedBy == expectDispatch(r, kTol = 0.9),
+      s"probes=$probes decided=${r.decidedBy}")
     if (probes.maxBy(_._2)._1 == probes.last._1)
-      assert(decided == "modularity",
+      assert(r.decidedBy == "modularity",
         s"boundary argmax + no-evidence fire must dispatch modularity: $probes")
-    assert(k == (if (decided == "llh") probes.maxBy(_._2)._1
-                 else probes.maxBy(_._3)._1))
+    assert(r.k == (if (r.decidedBy == "llh") probes.maxBy(_._2)._1
+                   else probes.maxBy(_._3)._1))
   }
 
   test("selectKSparse criterion=auto on a hub-dominated power-law micro graph") {
@@ -323,20 +242,15 @@ class ModelSelectionSpec extends AnyFunSuite {
     // typically the boundary-riding branch, i.e. the modularity pick)
     val pl = GraphOps.symEdges(
       graft.graph.GraphGen.powerLawEdges(s, 300, 900)).cache()
-    var probes = Vector.empty[(Int, Double, Double)]
-    var decided = ""
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, _, _) = BigClam.selectKSparse(pl, BigClam.Params(k = 2),
+    val r = BigClam.selectKSparse(pl, BigClam.Params(k = 2),
       minK = 2, maxK = 8, steps = 2, fitIterations = 25, llhTol = Some(1e-4),
-      supportCap = Some(4), criterion = "auto",
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      decisionProbe = d => decided = d,
-      diagProbe = d => diag = Some(d))
-    val expectBy = expectDispatch(probes, diag.get)
-    assert(decided == expectBy, s"probes=$probes decided=$decided")
+      supportCap = Some(4), criterion = "auto")
+    val probes = curve(r)
+    val expectBy = expectDispatch(r)
+    assert(r.decidedBy == expectBy, s"probes=$probes decided=${r.decidedBy}")
     val expectK = if (expectBy == "llh") probes.maxBy(_._2)._1
                   else probes.maxBy(_._3)._1
-    assert(k == expectK, s"probes=$probes decided=$decided k=$k")
+    assert(r.k == expectK, s"probes=$probes decided=${r.decidedBy} k=${r.k}")
   }
 
   test("RaceMemory arms only on consecutive decisive same-side verdicts") {
@@ -365,19 +279,13 @@ class ModelSelectionSpec extends AnyFunSuite {
     val m3 = new BigClam.RaceMemory()
     m3.observe(BigClam.InitDiag("ego", "ego", None))
     assert(m3.sticky.isEmpty)
-    // raceMemory demands the auto dispatch
-    intercept[IllegalArgumentException] {
-      BigClam.selectKSparse(edges, BigClam.Params(k = 2), minK = 2, maxK = 4,
-        steps = 1, raceMemory = true)
-    }
   }
 
   test("selectKSparse criterion=llh never pays the modularity pass") {
-    var sawQ = false
-    val (_, _, h) = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
-      minK = 2, maxK = 4, steps = 2, fitIterations = 2,
-      criterionProbe = (_, _, q) => sawQ = sawQ || !q.isNaN)
-    assert(h.nonEmpty && !sawQ, "default criterion must record q as NaN")
+    val r = BigClam.selectKSparse(edges, BigClam.Params(k = 2),
+      minK = 2, maxK = 4, steps = 2, fitIterations = 2)
+    assert(r.points.nonEmpty && r.points.forall(_.q.isNaN),
+      "default criterion must record q as NaN")
   }
 
   test("selectKSparse criterion=auto: a kTol fire on a genuine gain collapse keeps LLH the signal") {
@@ -389,11 +297,9 @@ class ModelSelectionSpec extends AnyFunSuite {
     // the knee — and, because the knee sits on the LAST grid point, the
     // old probe-count oracle would have called this fire invisible (the
     // round-16 ADVICE latent false failure, exercised for real here).
-    var probes0 = Vector.empty[(Int, Double, Double)]
-    BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+    val probes0 = curve(BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
       minK = 1, maxK = 4, steps = 2, fitIterations = 30, llhTol = Some(1e-4),
-      criterion = "modularity",
-      criterionProbe = (kk, l, q) => probes0 = probes0 :+ ((kk, l, q)))
+      criterion = "modularity"))
     val gains = probes0.map(_._2).sliding(2).collect {
       case Seq(a, b) => math.abs(1.0 - b / a) }.toVector
     assert(gains.size == 2 && gains(1) <= 0.2 * gains(0),
@@ -404,25 +310,19 @@ class ModelSelectionSpec extends AnyFunSuite {
     // pre-knee gain instead
     val kneeKTol =
       if (gains(1) > 0) math.sqrt(gains(0) * gains(1)) else gains(0) / 2
-    var probes = Vector.empty[(Int, Double, Double)]
-    var decided = ""
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, _, _) = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+    val r = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
       minK = 1, maxK = 4, steps = 2, fitIterations = 30, llhTol = Some(1e-4),
-      kTol = kneeKTol, criterion = "auto", escalateCap = 2,
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      decisionProbe = d => decided = d,
-      diagProbe = d => diag = Some(d))
-    val dg = diag.get
-    assert(dg.kTolFired && dg.fireCollapse,
-      s"the stop must fire AT the knee and register the collapse: $dg")
-    assert(decided == "llh" && dg.decidedBy == "llh",
-      s"a collapse fire is elbow evidence — LLH stays the signal: $dg")
-    assert(decided == expectDispatch(probes, dg, kTol = kneeKTol))
-    assert(k == probes.maxBy(_._2)._1, s"chosen K must be the LLH argmax")
+      kTol = kneeKTol, criterion = "auto", escalateCap = 2)
+    val probes = curve(r)
+    assert(r.kTolFired && r.fireCollapse,
+      s"the stop must fire AT the knee and register the collapse: $r")
+    assert(r.decidedBy == "llh",
+      s"a collapse fire is elbow evidence — LLH stays the signal: $r")
+    assert(r.decidedBy == expectDispatch(r, kTol = kneeKTol))
+    assert(r.k == probes.maxBy(_._2)._1, s"chosen K must be the LLH argmax")
     // the LLH side never escalates past a kTol fire: the stop IS the
     // reference's no-gain evidence (escalateCap=2 granted, none used)
-    assert(dg.escalations == 0 && probes.map(_._1) == probes0.map(_._1))
+    assert(r.escalations == 0 && probes.map(_._1) == probes0.map(_._1))
   }
 
   test("selectKSparse escalates a modularity boundary argmax to an interior q peak") {
@@ -432,95 +332,78 @@ class ModelSelectionSpec extends AnyFunSuite {
     // K=8000. With escalateCap the walk extends one log step (to 4, the
     // declared grid's own stride), sees q(4) < q(2), and lands on the
     // interior peak a wider grid would have found.
-    var probes = Vector.empty[(Int, Double, Double)]
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, fs, history) = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+    val r = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
       minK = 1, maxK = 2, steps = 1, fitIterations = 30, llhTol = Some(1e-4),
-      criterion = "modularity", escalateCap = 2,
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      diagProbe = d => diag = Some(d))
-    val dg = diag.get
-    assert(dg.evaluated == Seq(1, 2, 4),
-      s"one escalation step past maxK=2 at the grid's own stride: $dg")
-    assert(dg.escalations == 1 && !dg.boundaryPick,
-      s"the escalated point turned the boundary pick interior: $dg")
-    assert(k == 2, s"interior q peak is the two-clique cut: $probes")
+      criterion = "modularity", escalateCap = 2)
+    val probes = curve(r)
+    assert(probes.map(_._1) == Seq(1, 2, 4),
+      s"one escalation step past maxK=2 at the grid's own stride: $r")
+    assert(r.escalations == 1 && !r.boundaryPick,
+      s"the escalated point turned the boundary pick interior: $r")
+    assert(r.k == 2, s"interior q peak is the two-clique cut: $probes")
     // the escalated K=4 fit converges to the same two-community structure
     // (q ties exactly); the strict-improvement best rule keeps the FIRST
     // argmax, so the tie still turns the pick interior
     assert(probes(2)._3 <= probes(1)._3,
       s"q must not rise at the escalated K=4: $probes")
-    assert(history.map(_._1) == Seq(1, 2, 4),
-      "escalated points join the returned curve")
-    assert(fs.count() == 10)
+    assert(r.f.count() == 10)
   }
 
   test("selectKSparse escalateCap=0 leaves the pick flagged as boundary") {
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, _, _) = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+    val r = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
       minK = 1, maxK = 2, steps = 1, fitIterations = 30, llhTol = Some(1e-4),
-      criterion = "modularity",
-      diagProbe = d => diag = Some(d))
-    val dg = diag.get
-    assert(k == 2 && dg.boundaryPick && dg.escalations == 0 &&
-      dg.evaluated == Seq(1, 2),
+      criterion = "modularity")
+    assert(r.k == 2 && r.boundaryPick && r.escalations == 0 &&
+      r.points.map(_.k) == Seq(1, 2),
       s"default escalateCap=0 keeps recorded walks bit-identical but must " +
-        s"flag the evidence-free boundary choice: $dg")
+        s"flag the evidence-free boundary choice: $r")
   }
 
   test("selectKSparse llh-side escalation walks past maxK while the argmax rides the boundary") {
     // criterion=llh, grid exhausted mid-climb (no kTol fire): the
     // reference's walk-until-no-gain contract says the walk is not done —
     // escalation extends it; whether the escalated point turns the argmax
-    // interior is the curve's business, the diag must report it honestly
-    var probes = Vector.empty[(Int, Double, Double)]
-    var diag = Option.empty[BigClam.SelectKDiag]
-    val (k, _, _) = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+    // interior is the curve's business, the result must report it honestly
+    val r = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
       minK = 1, maxK = 2, steps = 1, fitIterations = 30, llhTol = Some(1e-4),
-      criterion = "llh", escalateCap = 1,
-      criterionProbe = (kk, l, q) => probes = probes :+ ((kk, l, q)),
-      diagProbe = d => diag = Some(d))
-    val dg = diag.get
-    assert(dg.escalations == 1 && dg.evaluated == Seq(1, 2, 4),
-      s"boundary LLH argmax at K=2 must escalate once: $dg")
+      criterion = "llh", escalateCap = 1)
+    val probes = curve(r)
+    assert(r.escalations == 1 && probes.map(_._1) == Seq(1, 2, 4),
+      s"boundary LLH argmax at K=2 must escalate once: $r")
     val argmax = probes.maxBy(_._2)._1
-    assert(k == argmax && dg.chosenK == argmax)
-    assert(dg.boundaryPick == (argmax == 4), s"honest boundary flag: $dg")
+    assert(r.k == argmax)
+    assert(r.boundaryPick == (argmax == 4), s"honest boundary flag: $r")
     assert(probes.forall(_._3.isNaN), "llh criterion never pays the q pass")
   }
 
   test("selectKSparse stateDir persists, replays, and resumes to the same choice") {
     val dir = java.nio.file.Files.createTempDirectory("selk_state").toString
-    def walk(escalate: Int = 0) = {
-      var diag = Option.empty[BigClam.SelectKDiag]
-      val (k, fs, curve) = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
-        minK = 1, maxK = 4, steps = 2, fitIterations = 30,
-        llhTol = Some(1e-4), criterion = "auto", escalateCap = escalate,
-        stateDir = Some(dir),
-        diagProbe = d => diag = Some(d))
-      (k, fs, curve, diag.get)
-    }
-    val (k1, _, curve1, d1) = walk()
-    assert(d1.replayed.isEmpty, s"first pass fits everything live: $d1")
+    def walk() = BigClam.selectKSparse(cliq, BigClam.Params(k = 1),
+      minK = 1, maxK = 4, steps = 2, fitIterations = 30,
+      llhTol = Some(1e-4), criterion = "auto", stateDir = Some(dir))
+    def replayed(r: BigClam.SelectKResult) = r.points.filter(_.replayed).map(_.k)
+    val r1 = walk()
+    val evaluated = r1.points.map(_.k)
+    assert(replayed(r1).isEmpty, s"first pass fits everything live: $r1")
     assert(new java.io.File(dir, "meta.properties").exists())
-    d1.evaluated.foreach { kk =>
+    evaluated.foreach { kk =>
       assert(new java.io.File(dir, s"point_k$kk.properties").exists())
       assert(new java.io.File(dir, s"f_k$kk.parquet").exists())
     }
     // full replay: every point restored from the store, zero refits, the
     // returned best F reads from the store's parquet
-    val (k2, fs2, curve2, d2) = walk()
-    assert(d2.replayed == d1.evaluated, s"full replay: $d2")
-    assert(k2 == k1 && curve2 == curve1 && d2.decidedBy == d1.decidedBy)
-    assert(fs2.count() == 10)
+    val r2 = walk()
+    assert(replayed(r2) == evaluated, s"full replay: $r2")
+    assert(r2.k == r1.k && curve(r2) == curve(r1) && r2.decidedBy == r1.decidedBy)
+    assert(r2.f.count() == 10)
     // kill-and-resume: drop the LAST completed point (the crash window),
     // the resumed walk replays the prefix and refits only the tail —
     // deterministic fits land on the identical curve and choice
-    val lastK = d1.evaluated.last
+    val lastK = evaluated.last
     assert(new java.io.File(dir, s"point_k$lastK.properties").delete())
-    val (k3, _, curve3, d3) = walk()
-    assert(d3.replayed == d1.evaluated.dropRight(1), s"partial resume: $d3")
-    assert(k3 == k1 && curve3 == curve1 && d3.decidedBy == d1.decidedBy)
+    val r3 = walk()
+    assert(replayed(r3) == evaluated.dropRight(1), s"partial resume: $r3")
+    assert(r3.k == r1.k && curve(r3) == curve(r1) && r3.decidedBy == r1.decidedBy)
     // a resume with drifted walk parameters must fail loudly, not splice
     intercept[IllegalArgumentException] {
       BigClam.selectKSparse(cliq, BigClam.Params(k = 1),

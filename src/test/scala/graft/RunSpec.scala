@@ -85,5 +85,8 @@ class RunSpec extends AnyFunSuite {
     assert(msg("bigclam", "source=synth:100:300", "k=abc")
       .contains("bad value for k: 'abc'"))
     assert(msg("graph", "source=synth:100").contains("bad source 'synth:100'"))
+    // an empty K grid is rejected before any fit
+    val grid = msg("selectk", "source=synth:100:300", "minK=8", "maxK=4")
+    assert(grid.contains("minK=8") && grid.contains("maxK=4"), grid)
   }
 }
